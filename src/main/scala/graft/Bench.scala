@@ -268,7 +268,7 @@ object Bench {
     // per-pass result fingerprints (row count, order-insensitive
     // bit_xor of per-row xxhash64): the serving story's realistic
     // failure mode is 8 submitter threads racing the shared session
-    // artifacts (PlanCache, IVF index, term stats) into a corrupted
+    // artifacts (ArtifactStore: IVF index, term stats) into a corrupted
     // state — a speedup number with matching error COUNTS but
     // silently different ANSWERS would hide exactly that, so every
     // query's concurrent result is hash-compared to its sequential

@@ -23,21 +23,17 @@ import org.apache.spark.sql.functions._
   *
   * Build: `small.stat.bloomFilter` (distributed partial aggregation,
   * sketch merged on the driver), memoized per (small plan, key, fpp)
-  * under the session's build-once artifact contract (PlanCache) —
+  * under the session's build-once artifact contract (ArtifactStore) —
   * repeated joins against the same dimension slice reuse the sketch.
   * Constructing the frame is therefore EAGER on first use (count +
   * sketch jobs), like the other planner-stats passes.
   */
 object BloomJoin {
 
-  // snapshot semantics documented on PlanCache
-  private val bloomCache =
-    new PlanCache[(String, Double), Array[Byte]]()
-
   /** Serialized bloom filter of `small`'s `key` column (memoized). */
   private[graft] def bloomBytesFor(small: DataFrame, key: String,
       fpp: Double): Array[Byte] =
-    bloomCache.get(small, (key, fpp)) {
+    ArtifactStore.value("bloom_filter", small, (key, fpp)) {
       val n = small.count()
       // an EMPTY build side must yield a valid never-matching filter:
       // stat.bloomFilter's zero-row aggregation returns a sketch with
@@ -50,7 +46,7 @@ object BloomJoin {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray
-    }
+    }()
 
   /** Inner equi-join of `big` to `small` with a bloom pre-filter on
     * the big side. Result is identical to
@@ -66,7 +62,4 @@ object BloomJoin {
       graft.functions.BloomOps.might_contain(col(bigKey), bytes))
     pruned.join(small, pruned(bigKey) === small(smallKey))
   }
-
-  /** Test/iteration hook: drop memoized sketches. */
-  def clearCache(): Unit = bloomCache.clear()
 }

@@ -45,8 +45,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * consistent BY CONSTRUCTION (both are pure functions of row values),
   * so there is nothing to pin, nothing to reuse, and no divergence to
   * guard — the residual left-join null check only catches a table
-  * whose files changed between plan time and execution (the PlanCache
-  * snapshot caveat, made loud).
+  * whose files changed between plan time and execution (the
+  * ArtifactStore snapshot caveat, made loud).
   *
   * Equality with the window forms REQUIRES `order` to be a total order
   * (ties make both forms nondeterministic); callers carry a unique key

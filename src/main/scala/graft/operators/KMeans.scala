@@ -233,31 +233,23 @@ object KMeans {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)))))
 
-  // Trained quantizers are persisted per (input plan, params) for the
-  // session — the index-build is the expensive phase of IVF and a real
-  // deployment trains once, serves many queries (snapshot semantics
-  // documented on PlanCache).
-  private val cache =
-    new PlanCache[(String, Int, Int, Int), Trained]()
-
+  // Trained quantizers are session artifacts per (input plan, params)
+  // — the index-build is the expensive phase of IVF and a real
+  // deployment trains once, serves many queries.
   def fitStatsCached(emb: DataFrame, vecCol: String, idCol: String,
       k: Int, iters: Int, sampleCap: Int = 0): Trained =
-    cache.get(emb, (s"$vecCol/$idCol", k, iters, sampleCap))(
-      fitStats(emb, vecCol, idCol, k, iters, sampleCap))
+    ArtifactStore.value("kmeans", emb, (vecCol, idCol, k, iters, sampleCap))(
+      fitStats(emb, vecCol, idCol, k, iters, sampleCap))()
 
   def fitCached(emb: DataFrame, vecCol: String, idCol: String,
       k: Int, iters: Int): IndexedSeq[Array[Double]] =
     fitStatsCached(emb, vecCol, idCol, k, iters).cents
 
-  /** Test hook: drop persisted quantizers (both the training cache
-    * and the per-(dir, version) load cache). */
-  def clearCache(): Unit = {
-    cache.clear()
-    loadedCache.clear()
-  }
+  /** Test hook: drop the per-(dir, version) load cache. */
+  def clearLoadedCache(): Unit = loadedCache.clear()
 
   // ---- durable persistence: train once, serve from ANY process -----
-  // The session PlanCache covers serve-many within one driver; a real
+  // The session ArtifactStore covers serve-many within one driver; a real
   // 100 TB deployment trains the quantizer in an index-build job and
   // SERVES it from query/dedup jobs in other processes. The store
   // rides graft.streaming.VersionedState (the same protocol as the

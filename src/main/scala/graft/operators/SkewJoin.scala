@@ -102,10 +102,6 @@ object SkewJoin {
     * on a real cluster — callers holding them pass `knownHotKeys`
     * and skip the probe entirely.
     */
-  // snapshot semantics documented on PlanCache
-  private val hotKeyCache =
-    new PlanCache[(String, Double, Long, Int), Array[Any]]()
-
   /** Sample the big side once and collect keys estimated above
     * `hotRowThreshold` rows (bounded at `maxHotKeys`); memoized per
     * canonicalized plan so repeated joins reuse one scan. */
@@ -129,8 +125,8 @@ object SkewJoin {
         "set is driver-resident and broadcast into the cold-branch " +
         "filter — a skew profile needing more hot keys should use " +
         "range partitioning, not a salted replicate")
-    hotKeyCache.get(
-      big, (bigKey, sampleFraction, hotRowThreshold, maxHotKeys)) {
+    ArtifactStore.value("hot_keys", big,
+        (bigKey, sampleFraction, hotRowThreshold, maxHotKeys)) {
       val sampledCut = math.max(1L, (hotRowThreshold * sampleFraction).toLong)
       // NULL keys must not reach hotKeys: a NULL element makes the cold
       // branch's NOT-IN filter evaluate to NULL for every non-hot row
@@ -142,9 +138,6 @@ object SkewJoin {
         .filter(col("count") >= sampledCut)
         .orderBy(col("count").desc).limit(maxHotKeys)
         .select(col(bigKey)).collect().map(_.get(0))
-    }
+    }()
   }
-
-  /** Test/iteration hook: drop memoized probe results. */
-  def clearHotKeyCache(): Unit = hotKeyCache.clear()
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Canon, Tables}
+import graft.operators.ArtifactStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,19 +44,10 @@ object Curation {
       .groupBy(col("source"), col("w"))
       .agg(sum(col("c")).as("tf"), count(lit(1)).as("sdf"))
 
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val termStatsCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
   /** Session-persisted per-(source, word) term statistics for
-    * `documents` (build-once artifact; see note above). Stored as a
-    * session parquet table (ArtifactStore) so the many consumers
-    * analyze a file scan, not the tokenize derivation. */
+    * `documents` (build-once artifact; see note above). */
   private[queries] def termStats(documents: DataFrame): DataFrame =
-    termStatsCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(termStatsFor(documents), "term_stats"))
+    ArtifactStore.frame("term_stats", documents)(termStatsFor(documents))
 
   /** Global document frequency per term (w, df) = Σ over sources of
     * sdf — the ONE shared derivation for every idf consumer
@@ -71,37 +63,12 @@ object Curation {
   // re-aggregation of the term-stats artifact. Sharing the frame
   // keeps the idf definition drift-free across consumers (the
   // globalDf argument, one level up).
-  private val idfModelCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  private[queries] def idfModel(documents: DataFrame): DataFrame = {
-    val base = globalDf(documents) // resolve dependency pre-cache
-    idfModelCache.get(documents, ())(
-      graft.operators.ArtifactStore.stored(
-        base
-          .crossJoin(broadcast(
-            documents.agg(count(lit(1)).as("n_docs"))))
-          .select(col("w"), col("df"),
-            log(col("n_docs").cast(DoubleType) / col("df")).as("idf")),
-        "idf_model"))
-  }
-
-  /** Test hook: drop persisted term-stats frames (and the unigram /
-    * bigram artifacts derived from the same corpus snapshot). */
-  private[graft] def clearTermStats(): Unit = {
-    termStatsCache.clear()
-    bm25ScoresCache.clear()
-    unigramCache.clear()
-    bigramStatsCache.clear()
-    lmModelCache.clear()
-    lmScoresCache.clear()
-    idfModelCache.clear()
-    bm25StatsCache.clear()
-    mgSketchCache.clear()
-    cmsSketchCache.clear()
-    bpeMergesCache.clear()
-  }
+  private[queries] def idfModel(documents: DataFrame): DataFrame =
+    ArtifactStore.frame("idf_model", documents)(
+      globalDf(documents)
+        .crossJoin(broadcast(documents.agg(count(lit(1)).as("n_docs"))))
+        .select(col("w"), col("df"),
+          log(col("n_docs").cast(DoubleType) / col("df")).as("idf")))
 
   // ---- llm_vocab_topk: corpus vocabulary, top-k by frequency --------
   // Served from the term-stats artifact: one tiny (word-keyed) re-agg
@@ -680,27 +647,9 @@ object Curation {
   // should cap quota at n and re-allocate, a metadata-size loop.)
   private val MixTarget = 200
 
-  // Session-persisted mixer state (round-14): the per-source quota
-  // table and the phase-1 per-(scan-partition, source) reservoir are
-  // pure functions of the corpus snapshot — exactly the sampling
-  // index a production mixer stores (the pair-index/term-stats
-  // contract) — yet each invocation re-ran the source census AND the
-  // corpus md5 + partition-local rank pass. Residency: quotas = one
-  // row per source; the reservoir ≤ scan partitions × sources ×
-  // MixTarget skinny rows. The reservoir freezes the scan
-  // partitioning it saw (same retry-stability argument as the
-  // uncached form; snapshot semantics on graft.operators.PlanCache).
-  private val mixCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop the persisted mixer state. */
-  private[queries] def clearMixState(): Unit = mixCache.clear()
-
   private val mix: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
-    val quotas = mixCache.get(docs, "quotas")(
-      graft.operators.ArtifactStore.stored(docs
+    val quotas = docs
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
       .withColumn("w", sqrt(col("n").cast(DoubleType)))
@@ -713,8 +662,7 @@ object Curation {
         .orderBy((col("exact") - col("base")).desc, col("source"))))
       .withColumn("quota",
         col("base") + when(col("rrk") <= col("short"), 1L).otherwise(0L))
-      .select(col("source"), col("quota")),
-      "mix_quotas"))
+      .select(col("source"), col("quota"))
     // per-group top-K in two phases: a source's global smallest-md5
     // quota set is a subset of every partitioning's partition-local
     // top-MixTarget for that source, so phase 1 ranks within
@@ -726,16 +674,14 @@ object Curation {
     // survivors. Input partitioning is a deterministic table scan, so
     // the survivor superset is retry-stable; the final filter is
     // partitioning-independent either way.
-    val hashed = mixCache.get(docs, "phase1")(
-      graft.operators.ArtifactStore.stored(docs
-        .select(col("doc_id"), col("source"),
-          md5(encode(col("doc_id").cast(StringType), "UTF-8")).as("h"))
-        .withColumn("pid", spark_partition_id())
-        .withColumn("prk", row_number().over(
-          Window.partitionBy(col("pid"), col("source"))
-            .orderBy(col("h"), col("doc_id"))))
-        .filter(col("prk") <= MixTarget),
-        "mix_phase1"))
+    val hashed = docs
+      .select(col("doc_id"), col("source"),
+        md5(encode(col("doc_id").cast(StringType), "UTF-8")).as("h"))
+      .withColumn("pid", spark_partition_id())
+      .withColumn("prk", row_number().over(
+        Window.partitionBy(col("pid"), col("source"))
+          .orderBy(col("h"), col("doc_id"))))
+      .filter(col("prk") <= MixTarget)
     val ranked = hashed
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("source"))
@@ -899,14 +845,8 @@ object Curation {
     * memory removes a per-query stage round-trip (the r5 verdict's
     * bigram-LM/PMI wall-clock diagnosis). */
   private[queries] def unigramCounts(documents: DataFrame): DataFrame =
-    unigramCache.get(documents, ())(
-      graft.operators.ArtifactStore.stored(
-        termStats(documents).groupBy(col("w")).agg(sum(col("tf")).as("u")),
-        "unigram_counts"))
-
-  private val unigramCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
+    ArtifactStore.frame("unigram_counts", documents)(
+      termStats(documents).groupBy(col("w")).agg(sum(col("tf")).as("u")))
 
   // ---- the per-(w1, w2) bigram-stats ARTIFACT ------------------------
   // The bigram companion of term-stats (VERDICT r5 #2): corpus bigram
@@ -925,16 +865,11 @@ object Curation {
       .filter(col("w1").isNotNull && col("w2").isNotNull)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("b"))
 
-  private val bigramStatsCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
   /** Session-persisted per-(w1, w2) bigram counts for `documents`
     * (build-once artifact; see note above). */
   private[queries] def bigramStats(documents: DataFrame): DataFrame =
-    bigramStatsCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(bigramStatsFor(documents), "bigram_stats"))
+    ArtifactStore.frame("bigram_stats", documents)(
+      bigramStatsFor(documents))
 
   private[queries] def bigramLmFor(documents: DataFrame): DataFrame = {
     val bi = bigramRows(documents)
@@ -975,19 +910,13 @@ object Curation {
   // in one pass — a pure per-row scan, no explode, no join, no
   // aggregation exchange. The model here is the (w1, w2) → lp map
   // collected ONCE per corpus snapshot from the session bigram-stats
-  // and term-stats artifacts (PlanCache), bounded by the corpus
+  // and term-stats artifacts (ArtifactStore), bounded by the corpus
   // bigram vocabulary; a servable production LM is min-count-pruned
   // to stay shippable, and the loud cap below makes an un-prunable
   // vocabulary fail fast instead of OOMing the driver — fall back to
   // [[bigramLmFor]] (the oracle twin, kept green in QueriesSpec) when
   // the model outgrows broadcast.
   private[queries] val MaxLmModelEntries = 50000000
-
-  private val lmModelCache =
-    new graft.operators.PlanCache[Unit,
-      org.apache.spark.broadcast.Broadcast[
-        scala.collection.Map[(String, String), Double]]](
-      b => { b.unpersist(); () })
 
   /** The (w1, w2, lp) weight table of the corpus bigram LM — the
     * derivation behind the broadcast model, exposed separately so the
@@ -998,7 +927,7 @@ object Curation {
 
   /** Uncached weight derivation for ONE-OFF corpora (the maintainer's
     * creation batch): routing a never-recurring micro-batch plan
-    * through the session PlanCaches would persist term-stat frames no
+    * through the session ArtifactStore would persist term-stat frames no
     * later query can ever hit (r7 review). */
   private[graft] def lmModelWeightsUncached(documents: DataFrame)
       : DataFrame =
@@ -1042,9 +971,9 @@ object Curation {
       maxEntries: Long = MaxLmModelEntries.toLong)
       : org.apache.spark.broadcast.Broadcast[
         scala.collection.Map[(String, String), Double]] = {
-    val b = lmModelCache.get(documents, ()) {
-      broadcastWeights(lmModelWeights(documents), maxEntries)
-    }
+    val b = ArtifactStore.value("lm_model", documents)(
+      broadcastWeights(lmModelWeights(documents), maxEntries))(
+      _.unpersist())
     // the cap must hold on cache HITS too (r6 review): the cache key
     // ignores maxEntries, so a stricter budget probed after a larger
     // build must still refuse, not silently serve the oversized model
@@ -1068,14 +997,8 @@ object Curation {
   // snapshot, then every consumer (the LM report, the CCNet quartile
   // bucketing, any future perplexity filter) re-reads the persisted
   // frame instead of re-scanning the corpus.
-  private val lmScoresCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
   private[queries] def lmScoresFor(documents: DataFrame): DataFrame =
-    lmScoresCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(bigramLmScanFor(documents), "lm_scores"))
+    ArtifactStore.frame("lm_scores", documents)(bigramLmScanFor(documents))
 
   /** Per-row LM scoring against a FIXED broadcast model — the scorer
     * both the per-corpus scan and the incremental maintainer
@@ -1250,16 +1173,12 @@ object Curation {
   // tooling, plan-pinning specs) paid a corpus scan before touching
   // the plan. Cache the driver-side sketch per corpus snapshot like
   // termStats: built once, served to every later construction.
-  private val mgSketchCache =
-    new graft.operators.PlanCache[Int, (Map[String, Long], Long)]()
-  private val cmsSketchCache =
-    new graft.operators.PlanCache[Int, (Array[Long], Long)]()
 
   private val q59: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
     val toks = docs.select(explode(split(col("text"), " ")).as("w"))
-    val (est, n) = mgSketchCache.get(docs, 64)(
-      graft.operators.HeavyHitters.sketch(toks, "w", k = 64))
+    val (est, n) = ArtifactStore.value("mg_sketch", docs, 64)(
+      graft.operators.HeavyHitters.sketch(toks, "w", k = 64))()
     val bound = n.toDouble / 65
     import s.implicits._
     val estDf = est.toSeq.toDF("w", "est")
@@ -1300,8 +1219,8 @@ object Curation {
   private val q63: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
     val toks = docs.select(explode(split(col("text"), " ")).as("w"))
-    val (m, _) = cmsSketchCache.get(docs, CmsDepth)(
-      graft.operators.CountMin.sketch(toks, "w", CmsDepth))
+    val (m, _) = ArtifactStore.value("cms_sketch", docs, CmsDepth)(
+      graft.operators.CountMin.sketch(toks, "w", CmsDepth))()
     import s.implicits._
     val width = graft.operators.CountMin.Width
     val counters = m.toSeq.zipWithIndex.collect { case (c, i) if c > 0L =>
@@ -1649,31 +1568,20 @@ object Curation {
   // for the query-term set — the index-time model of a retrieval
   // system (document frequencies + the length normalizer), a
   // |terms|-row re-aggregation of the term-stats/unigram artifacts.
-  private val bm25StatsCache =
-    new graft.operators.PlanCache[Unit, DataFrame](df => {
-      df.unpersist(); ()
-    })
-
-  private def bm25StatsFor(documents: DataFrame): DataFrame = {
-    // resolve term-stats-derived dependencies before entering the
-    // cache (PlanCache nesting rules)
-    val dfT = globalDf(documents)
-      .filter(col("w").isin(Bm25Terms: _*))
-    val nu = unigramCounts(documents)
-    bm25StatsCache.get(documents, ())({
+  private def bm25StatsFor(documents: DataFrame): DataFrame =
+    ArtifactStore.frame("bm25_stats", documents) {
       // count docs WITH text: the oracle's avg(dl) skips null-text
       // rows (string_split(NULL) is NULL), so N must skip them too or
       // avgdl and every idf diverge on corpora with null documents
       val nDf = documents.agg(count(col("text")).as("n_docs"))
-      val nuDf = nu.agg(sum(col("u")).as("nu"))
+      val nuDf = unigramCounts(documents).agg(sum(col("u")).as("nu"))
       val statsDf = nDf.crossJoin(nuDf)
         .select(col("n_docs"),
           (col("nu").cast(DoubleType) / col("n_docs").cast(DoubleType))
             .as("avgdl"))
-      graft.operators.ArtifactStore
-        .stored(dfT.crossJoin(broadcast(statsDf)), "bm25_stats")
-    })
-  }
+      globalDf(documents).filter(col("w").isin(Bm25Terms: _*))
+        .crossJoin(broadcast(statsDf))
+    }
 
   /** The full (doc_id, bm25) scored frame — shared by llm_bm25 (which
     * top-10s it) and llm_hybrid_rrf (which ranks its top-20 as the
@@ -1683,16 +1591,9 @@ object Curation {
   // statistics-artifact class as lmScores: THREE consumers (llm_bm25,
   // llm_retrieval_ndcg's top-k, llm_hybrid_rrf's lexical leg) each
   // re-ran the tokenize+score pass per invocation
-  private val bm25ScoresCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  private[queries] def bm25ScoredFor(documents: DataFrame): DataFrame = {
-    val model = bm25StatsFor(documents) // resolve dependency pre-cache
-    bm25ScoresCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(bm25ScoredRaw(documents, model), "bm25_scores"))
-  }
+  private[queries] def bm25ScoredFor(documents: DataFrame): DataFrame =
+    ArtifactStore.frame("bm25_scores", documents)(
+      bm25ScoredRaw(documents, bm25StatsFor(documents)))
 
   private def bm25ScoredRaw(documents: DataFrame,
       model: DataFrame): DataFrame = {
@@ -1796,32 +1697,12 @@ object Curation {
   // DECIMAL(20, 12) before summing so partial-aggregation order
   // cannot move a bit; the final ndcg division + round(6) is one
   // mirrored double expression (the PMI discipline).
-  // Session-persisted graded-relevance labels (round-14, VERDICT r13
-  // Next #4): rel(doc) is a pure function of the corpus snapshot and
-  // the fixed query terms — the eval-set label table a retrieval
-  // pipeline stores next to its term stats — yet the r13 plan
-  // tokenized the corpus TWICE per invocation (once under the ranked
-  // join, once under the ideal-DCG histogram). One tokenize pass per
-  // corpus snapshot; (doc_id, rel int) is the same residency class as
-  // the perceptual-hash frames (O(corpus) narrow rows, disk-backed).
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val relLabelsCache =
-    new graft.operators.PlanCache[Unit, DataFrame](df => {
-      df.unpersist(); ()
-    })
-
-  /** Test hook: drop the persisted relevance-label frame. */
-  private[queries] def clearRelLabels(): Unit = relLabelsCache.clear()
-
   private val retrievalNdcg: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
-    val rel = relLabelsCache.get(docs, ())(
-      graft.operators.ArtifactStore.stored(
-        docs.select(col("doc_id"),
-          Bm25Terms.map(t0 =>
-            when(array_contains(split(col("text"), " "), t0), 1)
-              .otherwise(0)).reduce(_ + _).as("rel")),
-        "rel_labels"))
+    val rel = docs.select(col("doc_id"),
+      Bm25Terms.map(t0 =>
+        when(array_contains(split(col("text"), " "), t0), 1)
+          .otherwise(0)).reduce(_ + _).as("rel"))
     val topk = bm25ScoredFor(docs)
       .orderBy(col("bm25").desc, col("doc_id")).limit(10)
     val ks = s.range(1, 3).select((col("id") * 5).as("k")) // k = 5, 10
@@ -2048,9 +1929,6 @@ object Curation {
         col("z").getField("1").as("right_sym"))
       .agg(sum(col("u")).cast(LongType).as("cnt"))
 
-  private val bpeMergesCache =
-    new graft.operators.PlanCache[Int, Seq[(String, String, Long)]]()
-
   /** The training loop over an explicit unigram frame (w, u). */
   private def bpeTrainLoop(uni: DataFrame,
       n: Int): Seq[(String, String, Long)] = {
@@ -2073,9 +1951,8 @@ object Curation {
     * Stops early if the vocabulary fully merges before `n` rounds. */
   private[queries] def bpeMergesFor(documents: DataFrame,
       n: Int): Seq[(String, String, Long)] =
-    bpeMergesCache.get(documents, n) {
-      bpeTrainLoop(unigramCounts(documents), n)
-    }
+    ArtifactStore.value("bpe_merges", documents, n)(
+      bpeTrainLoop(unigramCounts(documents), n))()
 
   /** UNCACHED training from a one-off frame (the stream maintainer's
     * creation batch — its plan never recurs, so the session artifact
@@ -2297,22 +2174,14 @@ object Curation {
   // cutoffs derive from the (avg_logp, m) histogram — a bounded-grid
   // frame (scores are round(…,4)-valued), exactly the q80 valueCells
   // class — yet each invocation re-aggregated the corpus-sized score
-  // artifact to rebuild it. snapshot semantics on PlanCache.
-  private val lmHistCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop the persisted LM-score histogram. */
-  private[queries] def clearLmHist(): Unit = lmHistCache.clear()
+  // artifact to rebuild it.
 
   private val qualityBuckets: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
     val scored = lmScoresFor(docs)
       .select(col("doc_id"), col("avg_logp"))
-    val hist = lmHistCache.get(docs, ())(
-      graft.operators.ArtifactStore.stored(
-        scored.groupBy(col("avg_logp")).agg(count(lit(1)).as("m")),
-        "lm_hist"))
+    val hist = ArtifactStore.frame("lm_hist", docs)(
+      scored.groupBy(col("avg_logp")).agg(count(lit(1)).as("m")))
     val wc = Window.orderBy(col("avg_logp"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist.select(col("avg_logp"),

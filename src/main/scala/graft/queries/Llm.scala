@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Canon, Tables}
+import graft.operators.ArtifactStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -139,25 +140,13 @@ object Llm {
   // stats are an artifact a curation deployment builds once per corpus
   // snapshot: the output is bounded (df-capped candidate pairs ≪
   // corpus²) and every overlap measure (jaccard, containment) reads
-  // the same frame. snapshot semantics documented on
-  // graft.operators.PlanCache.
-  private val pairStatsCache =
-    new graft.operators.PlanCache[Int, DataFrame](df => {
-      df.unpersist(); graft.operators.ArtifactStore.drop(df) })
+  // the same frame.
 
   /** Session-persisted [[pairStatsFor]] (build-once overlap-stats
-    * index; see cache note above). Stored as a session parquet table
-    * (ArtifactStore) so consumers analyze a file scan, not the
-    * posting-list derivation. */
+    * index; see note above). */
   private[queries] def pairStatsIndex(docs: DataFrame,
       maxDf: Int = JaccardMaxDf): DataFrame =
-    pairStatsCache.get(docs, maxDf)(
-      graft.operators.ArtifactStore
-        .store(pairStatsFor(docs, maxDf), "pair_stats")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Test hook: drop persisted pair-stats indexes. */
-  private[queries] def clearPairStatsIndex(): Unit = pairStatsCache.clear()
+    ArtifactStore.frame("pair_stats", docs, maxDf)(pairStatsFor(docs, maxDf))
 
   /** Raw overlap statistics per candidate pair — (a_id, b_id, inter,
     * na, nb) with ids ordered — the shared substrate jaccard AND
@@ -292,26 +281,19 @@ object Llm {
 
   private val q30: Q = (s, dir) => {
     // norms are precomputed per vector (O(n)) so the pair join does a
-    // single codegen'd dot product per candidate pair. The exact
-    // thresholded pair set is the dedup index (session artifact, the
-    // lshVerifiedPairs contract) — the n² join is its BUILD.
-    val emb = t(s, dir, "embeddings")
-    cosinePairCache.get(emb, "brute:0.5")({
-      val e = emb
-        .select(col("vec_id"), col("embedding"),
-          sqrt(norm2(col("embedding"))).as("nrm"))
-      val a = e.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
-        col("nrm").as("na"))
-      val b = e.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
-        col("nrm").as("nb"))
-      graft.operators.ArtifactStore.stored(
-        a.join(b, col("a_id") < col("b_id"))
-          .select(col("a_id"), col("b_id"),
-            round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
-              .as("score"))
-          .filter(col("score") > 0.5),
-        "q30_pairs")
-    })
+    // single codegen'd dot product per candidate pair
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"),
+        sqrt(norm2(col("embedding"))).as("nrm"))
+    val a = e.select(col("vec_id").as("a_id"), col("embedding").as("ea"),
+      col("nrm").as("na"))
+    val b = e.select(col("vec_id").as("b_id"), col("embedding").as("eb"),
+      col("nrm").as("nb"))
+    a.join(b, col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"),
+        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
+          .as("score"))
+      .filter(col("score") > 0.5)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -579,13 +561,6 @@ object Llm {
   // cents/assign frames, whose persisted/checkpointed plans are not
   // key-stable — the r13 OPQ lesson); same residency class as the
   // ivfIndex assignment (O(corpus) rows, MEMORY_AND_DISK).
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val bitextSideCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop persisted bitext probe/serve sides. */
-  private[queries] def clearBitextSides(): Unit = bitextSideCache.clear()
 
   /** Cell-bounded mutual-top-1 pipeline over ANY quantizer: `cents`
     * (cid, ce, cn2) + its top-1 `assign` (vec_id, cid, embedding,
@@ -593,18 +568,16 @@ object Llm {
     * trained production path. `tag` names the quantizer for the
     * session probe/side cache (cents/assign must be pure functions of
     * (emb, tag) — true for both callers, whose indexes are themselves
-    * PlanCache artifacts of emb). */
+    * ArtifactStore artifacts of emb). */
   private def bitextIvfOver(emb: DataFrame, cents: DataFrame,
       assign: DataFrame, tag: String): DataFrame = {
     val lab = emb.select(col("vec_id"), col("label"))
     // B side: the index's own top-1 spherical assignment
-    val b = bitextSideCache.get(emb, s"$tag:b")(
-      graft.operators.ArtifactStore.stored(
-        assign.join(lab, "vec_id")
-          .filter(col("label") % 2 === 1)
-          .select(col("cid"), col("vec_id").as("b_id"),
-            col("embedding").as("eb"), col("n2").as("bn2")),
-        s"bitext_b_$tag"))
+    val b = ArtifactStore.frame("bitext_b", emb, tag)(
+      assign.join(lab, "vec_id")
+        .filter(col("label") % 2 === 1)
+        .select(col("cid"), col("vec_id").as("b_id"),
+          col("embedding").as("eb"), col("n2").as("bn2")))
     // A side: probe the top-2 centroids (cs desc, cid asc) — scored
     // map-side against the k broadcast centroids, top-2 picked by the
     // BOUNDED heap aggregate (round-14: the r13 collect buffered all
@@ -620,20 +593,18 @@ object Llm {
     val a0 = emb.filter(col("label") % 2 === 0)
       .select(col("vec_id"), col("embedding"),
         norm2(col("embedding")).as("n2"))
-    val aprobe = bitextSideCache.get(emb, s"$tag:aprobe")(
-      graft.operators.ArtifactStore.stored(
-        a0.crossJoin(broadcast(cents))
-          .withColumn("cs",
-            dot(col("embedding"), col("ce")) /
-              (sqrt(col("n2")) * sqrt(col("cn2"))))
-          .groupBy(col("vec_id"))
-          .agg(first(col("embedding")).as("ea"),
-            first(col("n2")).as("an2"),
-            graft.functions.TopKAgg.top_k_by(col("cs"),
-              struct((-col("cid")).as("neg"), col("cid")), 2).as("top2"))
-          .select(col("vec_id").as("a_id"), col("ea"), col("an2"),
-            explode(expr("transform(top2, x -> x.cid)")).as("cid")),
-        s"bitext_a_$tag"))
+    val aprobe = ArtifactStore.frame("bitext_a", emb, tag)(
+      a0.crossJoin(broadcast(cents))
+        .withColumn("cs",
+          dot(col("embedding"), col("ce")) /
+            (sqrt(col("n2")) * sqrt(col("cn2"))))
+        .groupBy(col("vec_id"))
+        .agg(first(col("embedding")).as("ea"),
+          first(col("n2")).as("an2"),
+          graft.functions.TopKAgg.top_k_by(col("cs"),
+            struct((-col("cid")).as("neg"), col("cid")), 2).as("top2"))
+        .select(col("vec_id").as("a_id"), col("ea"), col("an2"),
+          explode(expr("transform(top2, x -> x.cid)")).as("cid")))
     val pairs = aprobe.join(b, "cid")
       .select(col("a_id"), col("b_id"),
         (dot(col("ea"), col("eb")) /
@@ -807,23 +778,12 @@ object Llm {
   // "one pipeline, two outputs" for the jaccard/dedup_apply family).
   // The output is small by construction (verified near-dup pairs only,
   // ≪ corpus), so MEMORY_AND_DISK persistence is bounded.
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val pairIndexCache =
-    new graft.operators.PlanCache[Unit, DataFrame](df => {
-      df.unpersist(); graft.operators.ArtifactStore.drop(df) })
 
   /** Session-persisted verified near-dup pairs for `documents`
-    * (build-once dedup index; see cache note above). Stored as a
-    * session parquet table (ArtifactStore) so the five consumers
-    * analyze a file scan, not the LSH derivation. */
+    * (build-once dedup index; see note above). */
   private[queries] def lshVerifiedPairs(documents: DataFrame): DataFrame =
-    pairIndexCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .store(lshVerifiedPairsFor(documents), "neardup_pairs")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Test hook: drop persisted pair indexes. */
-  private[queries] def clearPairIndex(): Unit = pairIndexCache.clear()
+    ArtifactStore.frame("neardup_pairs", documents)(
+      lshVerifiedPairsFor(documents))
 
   private val minhashLsh: Q = (s, dir) =>
     lshVerifiedPairs(t(s, dir, "documents"))
@@ -1071,18 +1031,12 @@ object Llm {
   // a repeated query re-plans from the cached cardinality instead of
   // re-running the count job each construction (ADVICE r4 noted the
   // eager jobs; the first construction still pays them)
-  private val statsCache = new graft.operators.PlanCache[Unit, Long]()
-
-  /** Test hook: drop memoized corpus cardinalities (mirrors the other
-    * artifact caches so suites can fully reset the session). */
-  private[graft] def clearStatsCache(): Unit = statsCache.clear()
-
   private[queries] def cosineLshPairsFor(emb: DataFrame,
       threshold: Double = 0.5, nBands: Int = 16, bandBits: Int = 2)
       : DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding"),
       sqrt(norm2(col("embedding"))).as("nrm"))
-    val n = statsCache.get(emb, ())(emb.count())
+    val n = ArtifactStore.value("row_count", emb)(emb.count())()
     val allPairs = n * (n - 1) / 2
     // below ~1e8 pairs the codegen brute join is seconds of work on a
     // few cores — cheaper than even RUNNING the banding stats pass, so
@@ -1093,9 +1047,9 @@ object Llm {
     // banding-stats aggregation run as driver jobs) — an AQE-style
     // planning-time stats pass. Callers that need a lazy plan should
     // cache the input or pick a branch explicitly.
-    def candEstimate: Long = statsCache.get(
-      srpBandedFor(emb, nBands, bandBits), ())(
-      srpCandidateEstimate(emb, nBands, bandBits))
+    def candEstimate: Long = ArtifactStore.value("srp_candidates",
+      srpBandedFor(emb, nBands, bandBits))(
+      srpCandidateEstimate(emb, nBands, bandBits))()
     if (allPairs <= bruteCheapPairs || candEstimate >= allPairs / 2) {
       // broadcast pins BroadcastNestedLoopJoin: the brute branch fires
       // for n up to ~14k vectors, where 256-dim rows can exceed the
@@ -1119,28 +1073,9 @@ object Llm {
     }
   }
 
-  // session-persisted cosine near-dup pair sets (round 14): like the
-  // MinHash verified-pair index, a thresholded pair list IS the
-  // embedding-dedup index (bounded: score > threshold pairs ≪
-  // corpus²). Two entries — the LSH-or-brute path's (the
-  // branch-choosing stats jobs and candidate scoring ran per
-  // invocation before) and q30's declared exact n² twin's (kept
-  // separate: the LSH branch's recall at scale is ≈1 but not exact,
-  // and q30's contract is the exact join).
-  private val cosinePairCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop persisted cosine pair sets. */
-  private[queries] def clearCosinePairs(): Unit = cosinePairCache.clear()
-
-  private val cosineLsh: Q = (s, dir) => {
-    val emb = t(s, dir, "embeddings")
-    cosinePairCache.get(emb, "lsh:0.5:16:2")(
-      graft.operators.ArtifactStore
-        .stored(cosineLshPairsFor(emb), "cosine_pairs"))
+  private val cosineLsh: Q = (s, dir) =>
+    cosineLshPairsFor(t(s, dir, "embeddings"))
       .orderBy(col("a_id"), col("b_id"))
-  }
 
   // ---- fuzzy dedup: SimHash fingerprints (md5-bit hash, oracle-checked)
   // Per word, 64 hash bits come from the 16 leading hex digits of
@@ -1796,22 +1731,13 @@ object Llm {
 
   // like the MinHash verified-pair set above, the fingerprint-overlap
   // pair set IS the MOSS index a plagiarism/overlap pipeline builds
-  // once per corpus snapshot and serves many views from — same
-  // build-once/serve-many memoization contract (output bounded:
-  // df-capped pairs sharing ≥5 prints, ≪ corpus)
-  private val winnowIndexCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
+  // once per corpus snapshot and serves many views from (output
+  // bounded: df-capped pairs sharing ≥5 prints, ≪ corpus)
 
   /** Session-persisted winnow-fingerprint overlap pairs for
-    * `documents` (build-once overlap index; see cache note above). */
+    * `documents` (build-once overlap index; see note above). */
   private[queries] def winnowPairs(documents: DataFrame): DataFrame =
-    winnowIndexCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(winnowPairsFor(documents), "winnow_pairs"))
-
-  /** Test hook: drop persisted winnow overlap indexes. */
-  private[queries] def clearWinnowIndex(): Unit = winnowIndexCache.clear()
+    ArtifactStore.frame("winnow_pairs", documents)(winnowPairsFor(documents))
 
   private val winnowNeardup: Q = (s, dir) =>
     winnowPairs(t(s, dir, "documents"))

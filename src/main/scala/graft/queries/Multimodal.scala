@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.ArtifactStore
 import graft.functions.VectorOps.{dot_product => dot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -555,13 +556,6 @@ object Multimodal {
   private[queries] final case class IvfIndex(cents: DataFrame,
     assign: DataFrame)
 
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val ivfIndexCache =
-    new graft.operators.PlanCache[Unit, IvfIndex](ix => {
-      graft.operators.ArtifactStore.evict(ix.cents)
-      graft.operators.ArtifactStore.evict(ix.assign)
-    })
-
   /** Spherical top-1 assignment — THE one spelling of the
     * cosine-argmax + (cs desc, cid asc) tie-break (review r11: a
     * third hand copy had appeared; a tie-break or NaN-handling fix
@@ -585,68 +579,41 @@ object Multimodal {
       .agg(max_by(col("cid"), struct(col("cs"), -col("cid"))).as("cid"),
         first(col("embedding")).as("embedding"), first(col("n2")).as("n2"))
 
-  private def ivfIndexFor(emb: DataFrame): IvfIndex = {
-    val e = emb
-      .select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("n2"))
+  private def withNorm2(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"),
+      dot(col("embedding"), col("embedding")).as("n2"))
+
+  /** Session-persisted IVF index (quantizer + cell assignment) for
+    * `emb` (build-once; see note above). */
+  private[queries] def ivfIndex(emb: DataFrame): IvfIndex = {
     // deterministic hash-sampled coarse quantizer: the 8 vectors with
     // the smallest md5(vec_id) — seeded-sample semantics, no
     // insertion-order bias, identical on both engines. Identical
     // expression tree in the oracle -> identical doubles; centroids
     // broadcast.
-    val cents = e
+    val cents = ArtifactStore.frame("ivf_index", emb, "cents")(withNorm2(emb)
       .withColumn("hk", md5(col("vec_id").cast(StringType)))
       .orderBy(col("hk"))
       .limit(8)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("n2").as("cn2"))
-    val assign = sphericalAssign(e, cents)
-    IvfIndex(
-      graft.operators.ArtifactStore.stored(cents, "ivf_cents"),
-      graft.operators.ArtifactStore.stored(assign, "ivf_assign"))
+        col("n2").as("cn2")))
+    IvfIndex(cents, ArtifactStore.frame("ivf_index", emb, "assign")(
+      sphericalAssign(withNorm2(emb), cents)))
   }
 
-  /** Session-persisted IVF index (quantizer + cell assignment) for
-    * `emb` (build-once; see cache note above). */
-  private[queries] def ivfIndex(emb: DataFrame): IvfIndex =
-    ivfIndexCache.get(emb, ())(ivfIndexFor(emb))
-
-  // trained-index cache: the k=⌈√n⌉ KMeans quantizer's full IvfIndex
-  // (centroid frame + top-1 assignment), so trained serving paths
-  // (bitextIvfTrained) pay the corpus count + assignment join ONCE
-  // per session, like the hash-seeded index (review r11: only the
-  // centroid fit was cached, re-paying an uncached Θ(n·√n) crossJoin
-  // per serve call)
-  private val ivfTrainedIndexCache =
-    new graft.operators.PlanCache[Int, IvfIndex](ix => {
-      graft.operators.ArtifactStore.evict(ix.cents)
-      graft.operators.ArtifactStore.evict(ix.assign)
-    })
-
-  /** Session-persisted TRAINED IVF index: k = ⌈√n⌉ exact-Lloyd
-    * centroids (KMeans.fitCached) + spherical top-1 assignment. */
+  /** The TRAINED IVF index: k = ⌈√n⌉ exact-Lloyd centroids (the
+    * session `kmeans` artifact) + spherical top-1 assignment. Its one
+    * serving path (bitextIvfTrained) stores the probe/serve sides it
+    * derives from the assignment, so the Θ(n·√n) assignment join runs
+    * once per session there. */
   private[queries] def ivfTrainedIndex(emb: DataFrame,
-      iters: Int = 3): IvfIndex =
-    ivfTrainedIndexCache.get(emb, iters) {
-      val e = emb.select(col("vec_id"), col("embedding"),
-        dot(col("embedding"), col("embedding")).as("n2"))
-      val n = e.count()
-      val k = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val cents = graft.operators.KMeans.fitCached(
-        emb, "embedding", "vec_id", k, iters)
-      val centsDF = centroidsDF(emb.sparkSession, cents)
-      IvfIndex(
-        graft.operators.ArtifactStore.stored(centsDF, "ivf_t_cents"),
-        graft.operators.ArtifactStore
-          .stored(sphericalAssign(e, centsDF), "ivf_t_assign"))
-    }
-
-  /** Test hook. */
-  private[queries] def clearIvfTrainedIndex(): Unit =
-    ivfTrainedIndexCache.clear()
-
-  /** Test hook: drop persisted IVF indexes. */
-  private[queries] def clearIvfIndex(): Unit = ivfIndexCache.clear()
+      iters: Int = 3): IvfIndex = {
+    val n = ArtifactStore.value("row_count", emb)(emb.count())()
+    val k = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
+    val cents = centroidsDF(emb.sparkSession,
+      graft.operators.KMeans.fitCached(emb, "embedding", "vec_id", k, iters))
+    IvfIndex(cents, sphericalAssign(withNorm2(emb), cents))
+  }
 
   /** IVF top-k with a pluggable probe width. `nProbe=2` is the shipped
     * operator; MultimodalSpec sweeps it to quantify the recall/probe
@@ -767,13 +734,10 @@ object Multimodal {
   // the verdict row is index-build METADATA: persisted with the
   // trained quantizer (train once, validate once, serve many) — a
   // repeated call must not re-run the two objective scans
-  private val trainedVerdictCache =
-    new graft.operators.PlanCache[Int, (Long, Boolean)]()
-
   private[queries] def annIvfTrainedWith(s: SparkSession, dir: String,
       nProbe: Int): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val (k, noWorse) = trainedVerdictCache.get(emb, nProbe) {
+    val (k, noWorse) = ArtifactStore.value("ivf_t_verdict", emb) {
       val e = emb.select(col("vec_id"), col("embedding"),
         dot(col("embedding"), col("embedding")).as("n2"))
       val n = e.count()
@@ -789,14 +753,11 @@ object Multimodal {
           emb, "embedding", "vec_id", kk, iters = 3)
         (kk.toLong, meanMaxCos(e, trained) >= meanMaxCos(e, init))
       }
-    }
+    }()
     import s.implicits._
     Seq((k, nProbe.toLong, noWorse))
       .toDF("k", "n_probe", "trained_no_worse")
   }
-
-  /** Test hook: drop persisted verdict metadata. */
-  private[queries] def clearTrainedCache(): Unit = trainedVerdictCache.clear()
 
   private val annIvfTrained: Q = (s, dir) => annIvfTrainedWith(s, dir, 2)
 
@@ -1014,20 +975,14 @@ object Multimodal {
     val scale = e
       .select(posexplode(col("embedding")).as(Seq("idx", "x")))
       .agg(max(abs(col("x").cast(DoubleType))).as("s"))
-    // the quantized code table IS the SQ8 flat index — build once per
-    // corpus snapshot like the PQ code tables (it was re-encoded per
-    // invocation before round 14's store)
-    val quantized = pqCodesCache.get(e, "sq8")(
-      graft.operators.ArtifactStore.stored(
-        e.crossJoin(broadcast(scale))
-          .select(col("vec_id"), col("embedding"),
-            expr("""transform(embedding, x ->
-              cast(round(cast(x as double) / s * 127.0D, 0) as bigint))""")
-              .as("qv"))
-          .withColumn("q2",
-            expr("aggregate(transform(qv, x -> x * x), cast(0 as bigint), " +
-              "(acc, v) -> acc + v)")),
-        "sq8_codes"))
+    val quantized = e.crossJoin(broadcast(scale))
+      .select(col("vec_id"), col("embedding"),
+        expr("""transform(embedding, x ->
+          cast(round(cast(x as double) / s * 127.0D, 0) as bigint))""")
+          .as("qv"))
+      .withColumn("q2",
+        expr("aggregate(transform(qv, x -> x * x), cast(0 as bigint), " +
+          "(acc, v) -> acc + v)"))
     val q = quantized.filter(col("vec_id") === 0)
       .select(col("qv").as("qq"), col("embedding").as("qe"),
         col("q2").as("qq2"))
@@ -1093,25 +1048,16 @@ object Multimodal {
   // components rounded to 6 decimals — the broadcast model of the
   // outlier audit (and any nearest-class-mean consumer). Tiny
   // (|labels| rows) but TWO exchanges to derive; build-once.
-  private val centroidCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
   private def labelCentroidArraysFor(e: DataFrame): DataFrame =
-    centroidCache.get(e, ())(
-      graft.operators.ArtifactStore.stored(
-        e.select(col("label"),
-            posexplode(col("embedding")).as(Seq("idx", "x")))
-          .groupBy(col("label"), col("idx"))
-          .agg(round(avg(col("x").cast(DoubleType)), 6).as("c"))
-          .groupBy(col("label"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("idx"), col("c")))),
-            p => p.getField("c")).as("cent")),
-        "label_centroids"))
-
-  /** Test hook: drop persisted label centroids. */
-  private[graft] def clearCentroidCache(): Unit = centroidCache.clear()
+    ArtifactStore.frame("label_centroids", e)(
+      e.select(col("label"),
+          posexplode(col("embedding")).as(Seq("idx", "x")))
+        .groupBy(col("label"), col("idx"))
+        .agg(round(avg(col("x").cast(DoubleType)), 6).as("c"))
+        .groupBy(col("label"))
+        .agg(transform(
+          array_sort(collect_list(struct(col("idx"), col("c")))),
+          p => p.getField("c")).as("cent")))
 
   // ---- llm_embedding_outliers: distance-to-prototype audit -----------
   // The quality-control consumer of the class centroids: the 3 vectors
@@ -1256,13 +1202,6 @@ object Multimodal {
   // lesson that mirrored oracles don't check quality.
   // Like q63's sketch, the fit is an EAGER corpus action at
   // DataFrame-construction time — memoized per corpus snapshot.
-  private val pcaCache = new graft.operators.PlanCache[Unit,
-    graft.operators.Pca.Pc1]()
-
-  /** Test hook: drop memoized PC1 fits so a fixture rewritten at the
-    * same path in-session gets a fresh fit (r6 ADVICE — mirrors
-    * Stats.clearArtifacts / Curation.clearTermStats). */
-  private[graft] def clearPcaCache(): Unit = pcaCache.clear()
 
   private val embedPca: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
@@ -1278,8 +1217,8 @@ object Multimodal {
           StructField("eigenvalue", DoubleType),
           StructField("explained_var_ratio", DoubleType))))
     } else {
-      val fit = pcaCache.get(e, ())(
-        graft.operators.Pca.fitPc1(e, "embedding"))
+      val fit = ArtifactStore.value("pca_pc1", e)(
+        graft.operators.Pca.fitPc1(e, "embedding"))()
       val muProj =
         fit.vector.zip(fit.mean).map { case (a, b) => a * b }.sum
       val vCol = lit(fit.vector)
@@ -1556,17 +1495,13 @@ object Multimodal {
   // (the banding self-join's two subtrees each re-derived the hashes —
   // plan (14): streamed Generate + BroadcastExchange'd Generate, no
   // reuse). Residency: 2 rows/doc × 24 bytes, far below the pair
-  // index's bound. snapshot semantics on graft.operators.PlanCache
-  private val hashFrameCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
+  // index's bound.
 
   /** Session-cached perceptual-hash frame for `docs`, keyed by hash
     * family. */
   private def hashedFrame(docs: DataFrame, tag: String)(
       build: DataFrame => DataFrame): DataFrame =
-    hashFrameCache.get(docs, tag)(
-      graft.operators.ArtifactStore.stored(build(docs), s"hash_$tag"))
+    ArtifactStore.frame("hash_frame", docs, tag)(build(docs))
 
   private val phashDedup: Q = (s, dir) => {
     import s.implicits._
@@ -2145,9 +2080,6 @@ object Multimodal {
   // query. Persisting codes is the same residency class as the
   // ivfIndex assignment (O(corpus) rows × a few small ints — the 32×
   // memory-compression artifact itself).
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val pqCodesCache = new graft.operators.PlanCache[String, DataFrame](
-    graft.operators.ArtifactStore.evict)
 
   /** Session-cached [[pqCodes]]. Keyed by a STABLE source frame's plan
     * + a variant tag, NOT by the encode input itself: the OPQ path's
@@ -2158,9 +2090,7 @@ object Multimodal {
     * every call site, so the stable key identifies the codes. */
   private[graft] def pqCodesIndex(key: DataFrame, tag: String,
       vecs: DataFrame, cb: DataFrame): DataFrame =
-    pqCodesCache.get(key, tag)(
-      graft.operators.ArtifactStore
-        .stored(pqCodes(vecs, cb), s"pq_codes_$tag"))
+    ArtifactStore.frame("pq_codes", key, tag)(pqCodes(vecs, cb))
 
   /** ADC serving over an encoded frame: LUT + fold in subspace order
     * (see [[adcScores]]). */
@@ -2194,8 +2124,7 @@ object Multimodal {
     // the 16-row codebook is the other half of the PQ index: cache it
     // beside the codes (its per-invocation rebuild was an orderBy +
     // limit + window chain — pure scheduling quanta at serving time)
-    val cb = pqCodesCache.get(e, "pq-cb")(
-      graft.operators.ArtifactStore.stored(pqCodebook(e), "pq_cb"))
+    val cb = ArtifactStore.frame("pq_codebook", e, "pq")(pqCodebook(e))
     val q = e.filter(col("vec_id") === 0).select(col("ed").as("qe"))
     // serve from the session code table (the index); encode runs once
     // per corpus snapshot, exactly like ivfIndex's cell assignment
@@ -2290,15 +2219,13 @@ object Multimodal {
           .stripMargin).as("rd"))
     val cbW = Window.orderBy(col("h"), col("vec_id"))
     // 16-row residual codebook — cached beside the code table
-    // (pqCodesCache): it is the other half of the IVF-PQ index
-    val cb = pqCodesCache.get(emb, "ivfpq-cb")(
-      graft.operators.ArtifactStore.stored(e
-        .select(md5(col("vec_id").cast(StringType)).as("h"),
-          col("vec_id"), col("rd").as("cv"))
-        .orderBy(col("h"), col("vec_id")).limit(16)
-        .withColumn("cand", row_number().over(cbW) - 1) // 16-row frame
-        .select(col("cand"), col("cv")),
-        "ivfpq_cb"))
+    // (pqCodesIndex): it is the other half of the IVF-PQ index
+    val cb = ArtifactStore.frame("pq_codebook", emb, "ivfpq")(e
+      .select(md5(col("vec_id").cast(StringType)).as("h"),
+        col("vec_id"), col("rd").as("cv"))
+      .orderBy(col("h"), col("vec_id")).limit(16)
+      .withColumn("cand", row_number().over(cbW) - 1) // 16-row frame
+      .select(col("cand"), col("cv")))
     val dist = e.crossJoin(broadcast(cb))
       .select(col("vec_id"), col("cid"), col("cand"),
         posexplode(expr(
@@ -2313,12 +2240,10 @@ object Multimodal {
     // residual code table is the IVF-PQ index — build once per corpus
     // snapshot, serve per query. Keyed on (emb, "ivfpq"): the residual
     // frame is a pure function of emb through the cached ivfIndex.
-    val codes = pqCodesCache.get(emb, "ivfpq")(
-      graft.operators.ArtifactStore.stored(dist
-        .groupBy(col("vec_id"), col("cid"), col("s"))
-        .agg(min_by(col("cand"), struct(col("d2"), col("cand")))
-          .as("code")),
-        "ivfpq_codes"))
+    val codes = ArtifactStore.frame("pq_codes", emb, "ivfpq")(dist
+      .groupBy(col("vec_id"), col("cid"), col("s"))
+      .agg(min_by(col("cand"), struct(col("d2"), col("cand")))
+        .as("code")))
     val q = emb.filter(col("vec_id") === 0)
       .select(expr("transform(embedding, x -> cast(x as double))")
         .as("qe"))
@@ -2503,12 +2428,10 @@ object Multimodal {
     // index artifact like the codes and codebook (round 13; it was a
     // per-invocation lazy checkpoint before, so every serving call
     // re-ran the n×64 variance pass once)
-    val perm = pqCodesCache.get(e, "opq-perm")(
-      graft.operators.ArtifactStore.stored(ranked
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(s, r, dim)))," +
-            " x -> x.dim)").as("pm")),
-        "opq_perm"))
+    val perm = ArtifactStore.frame("opq_perm", e)(ranked
+      .agg(expr(
+        "transform(sort_array(collect_list(struct(s, r, dim)))," +
+          " x -> x.dim)").as("pm")))
     val pe = e.crossJoin(broadcast(perm))
       .select(col("vec_id"), col("ed"), expr(
         "transform(sequence(1, 64), i -> element_at(ed, element_at(pm, i)))")
@@ -2516,8 +2439,7 @@ object Multimodal {
     // from here: the SHARED PQ pipeline (pqCodebook + adcScores —
     // llm_ann_pq's exact trees) over the permuted vectors
     val pev = pe.select(col("vec_id"), col("pd").as("ed"))
-    val cb = pqCodesCache.get(e, "opq-cb")(
-      graft.operators.ArtifactStore.stored(pqCodebook(pev), "opq_cb"))
+    val cb = ArtifactStore.frame("pq_codebook", e, "opq")(pqCodebook(pev))
     val q = pe.filter(col("vec_id") === 0)
       .select(col("ed").as("qe"), col("pd").as("qd"))
     // cached on (e, "opq"): pev is a pure function of e (variance

@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{DistributedNtile, PlanCache}
+import graft.operators.{ArtifactStore, DistributedNtile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
-import org.apache.spark.storage.StorageLevel
 
 /** Build-once/serve-many rank artifact over the orders table
   * (VERDICT r12 #4): q39 (percentile witnesses), q52 (approx-
@@ -13,29 +12,26 @@ import org.apache.spark.storage.StorageLevel
   * all rank THE SAME axis — (o_totalprice, o_orderkey) within
   * o_orderpriority — yet round 12 built four independent rank runs
   * per inventory pass (~1 s each at sf0.1). This artifact builds the
-  * ranked frame ONCE per (table snapshot, session) under the
-  * term-stats/IVF-index PlanCache contract and persists it
-  * MEMORY_AND_DISK; the four consumers read the cached columns and
-  * differ only in their aggregation on top.
+  * ranked frame ONCE per (table snapshot, session) as an
+  * [[ArtifactStore]] frame; the four consumers read the stored
+  * columns and differ only in their aggregation on top.
   *
   * q55 is NOT served here: it ranks the `o_orderstatus = 'P'` SUBSET,
   * and a subset's per-group row ranks are not derivable from the full
   * corpus ranks (every retained row's rank depends on how many
-  * FILTERED rows precede it) — it keeps its own build.
+  * FILTERED rows precede it) — it ranks per invocation.
   *
   * Fault model: `persist` (unlike the retired `localCheckpoint`
   * freeze) RETAINS lineage, and round-13 ranks are a pure function of
   * row values against plan-frozen boundaries
   * (operators/RangeBuckets.scala), so a lost executor's partitions
   * recompute to identical ranks — the artifact is crash-consistent by
-  * construction. Snapshot semantics are PlanCache's: the artifact
-  * reflects the table as of its build (the catalog-statistics model);
-  * `PlanCache.clearAll()` after a table rewrite also unpersists it.
+  * construction. Snapshot semantics are ArtifactStore's: the
+  * artifact reflects the table as of its build (the
+  * catalog-statistics model); `ArtifactStore.clearAll()` after a
+  * table rewrite evicts it.
   */
 object OrderRanks {
-
-  private val cache = new PlanCache[String, DataFrame](
-    graft.operators.ArtifactStore.evict)
 
   /** Exact integer cents for o_totalprice — the shared presentation
     * discipline (integer cells cannot diverge across engine
@@ -54,34 +50,8 @@ object OrderRanks {
     val base = Tables(s, dir, "orders")
       .select(col("o_orderpriority"), col("o_totalprice"),
         col("o_orderkey"), centsCol.as("cents"))
-    cache.get(base, "rank:o_orderpriority/o_totalprice,o_orderkey") {
-      graft.operators.ArtifactStore.stored(
-        DistributedNtile
-          .withGroupRank(base, "o_orderpriority", "rn", "n",
-            col("o_totalprice"), col("o_orderkey")),
-        "order_ranks")
-    }
-  }
-
-  /** q55's ranked frame: the `o_orderstatus = 'P'` SUBSET ranked
-    * within o_orderpriority under the same total order. Subset ranks
-    * are NOT derivable from the full-corpus ranks (scaladoc above),
-    * so this keeps its own build — but the build is still a pure
-    * function of the corpus snapshot, so round-14 caches and
-    * persists it exactly like the full frame (the r13 form re-ran
-    * the sketch + count construction jobs and the rank exchange on
-    * every invocation). */
-  def pStatusByPriorityPrice(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables(s, dir, "orders")
-      .filter(col("o_orderstatus") === "P")
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        col("o_totalprice"))
-    cache.get(base, "rank:P/o_orderpriority/o_totalprice,o_orderkey") {
-      graft.operators.ArtifactStore.stored(
-        DistributedNtile
-          .withGroupRank(base, "o_orderpriority", "rn", "n",
-            col("o_totalprice"), col("o_orderkey")),
-        "order_ranks_p")
-    }
+    ArtifactStore.frame("order_ranks", base)(
+      DistributedNtile.withGroupRank(base, "o_orderpriority", "rn", "n",
+        col("o_totalprice"), col("o_orderkey")))
   }
 }

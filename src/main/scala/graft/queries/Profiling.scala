@@ -250,28 +250,12 @@ object Profiling {
   // over the 10-row decile aggregate (bounded by k forever, the q89
   // catalog-bounded justification). Ratios are double divisions of
   // exact integer (DECIMAL) products — identical on both engines.
-  // session-persisted document rank/tile frames (round-14, the
-  // OrderRanks precedent): q100's length deciles and q105's global
-  // score ranks are pure functions of the corpus snapshot, yet each
-  // invocation re-ran the DistributedNtile sketch + count
-  // construction jobs and the rank exchange. O(corpus) skinny rows,
-  // MEMORY_AND_DISK. snapshot semantics on graft.operators.PlanCache
-  private val docRanksCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop the persisted document rank frames. */
-  private[graft] def clearDocRanks(): Unit = docRanksCache.clear()
-
   private val q100: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
-    val tiled = docRanksCache.get(docs, "decile10:n_chars desc,doc_id")(
-      graft.operators.ArtifactStore.stored(
-        graft.operators.DistributedNtile.withNtile(
-          docs, 10, "decile", col("n_chars").desc, col("doc_id")),
-        "doc_deciles"))
+    val tiled = graft.operators.DistributedNtile.withNtile(
+      docs, 10, "decile", col("n_chars").desc, col("doc_id"))
     val perDecile = tiled.groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"), sum(col("pos")).as("n_pos"))
     val d18 = DecimalType(18, 0)
@@ -349,21 +333,13 @@ object Profiling {
   // exactly the state `streaming.HistStream` maintains additively
   // (the q80 valueCells precedent). Bounded by sources × 10 buckets,
   // so residency is KBs at any corpus size.
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val psiCellsCache =
-    new graft.operators.PlanCache[Unit, DataFrame](
-      graft.operators.ArtifactStore.evict)
-
-  /** Test hook: drop the persisted PSI cell frame. */
-  private[graft] def clearPsiCells(): Unit = psiCellsCache.clear()
 
   /** q104's body over any documents frame — also the parity target of
     * the incremental maintainer (HistStreamSpec serves its PSI from
     * streamed state and requires byte-identical rows). */
   private[graft] def psiFor(documents: DataFrame): DataFrame =
-    psiOfCells(psiCellsCache.get(documents, ())(
-      graft.operators.ArtifactStore
-        .stored(bucketCells(documents), "psi_cells")))
+    psiOfCells(graft.operators.ArtifactStore.frame("psi_cells", documents)(
+      bucketCells(documents)))
 
   /** q104's bucketing — the ONE definition the batch/stream pair
     * shares (HistStream maintains exactly these cells). */
@@ -454,11 +430,8 @@ object Profiling {
       .filter(col("n_chars").isNotNull)
       .select(col("doc_id"), col("n_chars").as("score"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
-    val ranked = docRanksCache.get(docs, "rank:score,doc_id")(
-      graft.operators.ArtifactStore.stored(
-        graft.operators.DistributedNtile
-          .withGlobalRank(docs, "rk", col("score"), col("doc_id")),
-        "doc_score_ranks"))
+    val ranked = graft.operators.DistributedNtile
+      .withGlobalRank(docs, "rk", col("score"), col("doc_id"))
     val ties = ranked.groupBy(col("score"))
       .agg(min(col("rk")).as("mn"), count(lit(1)).as("ts"))
     val sums = ranked

@@ -899,12 +899,14 @@ object Relational {
   // produced duplicate prices — the sf1 certification caught it):
   //   percent_rank = (rn − 1) / (n − 1)   [0 when n = 1]
   //   cume_dist    = rn / n
-  // round-14: the subset rank build is session-cached
-  // (OrderRanks.pStatusByPriorityPrice) — the per-invocation sketch +
-  // count construction jobs and the rank exchange run once per
-  // corpus snapshot; q55 aggregates on top
   private val q55: Q = (s, dir) => {
-    OrderRanks.pStatusByPriorityPrice(s, dir)
+    DistributedNtile.withGroupRank(
+        t(s, dir, "orders")
+          .filter(col("o_orderstatus") === "P")
+          .select(col("o_orderkey"), col("o_orderpriority"),
+            col("o_totalprice")),
+        "o_orderpriority", "rn", "n",
+        col("o_totalprice"), col("o_orderkey"))
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"),
         when(col("n") === 1, lit(0.0))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Canon, Tables, Witness}
+import graft.operators.ArtifactStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,40 +25,36 @@ object Stats {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
 
-  // ---- session artifacts (build-once/serve-many, PlanCache rules) ---
-  private val artifactCache =
-    new graft.operators.PlanCache[String, DataFrame](
-      graft.operators.ArtifactStore.evict)
+  // ---- market-basket and supplier-graph derivations ----------------
 
   /** Per-order sorted distinct part arrays — shared base of the
-    * market-basket queries. ONE exchange (groupBy orderkey with
+    * market-basket query. ONE exchange (groupBy orderkey with
     * map-side collect_set partials) builds it; the order count, the
-    * item counts, and the pair generation all read the persisted
-    * frame. Pairs come from an ARRAY expression over each basket —
-    * codegen'd row-local work — instead of a basket self-join, so the
-    * only other exchange in q83 is the final pair aggregation. */
+    * item counts, and the pair generation read the same subtree
+    * (one reused exchange). Pairs come from an ARRAY expression over
+    * each basket — codegen'd row-local work — instead of a basket
+    * self-join, so the only other exchange in q83 is the final pair
+    * aggregation. */
   private def basketArraysFor(li: DataFrame): DataFrame =
-    artifactCache.get(li, "basket_arrays")(
-      graft.operators.ArtifactStore.stored(
-        li.groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_partkey"))).as("parts")),
-        "basket_arrays"))
+    li.groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
 
   /** Thresholded supplier co-occurrence edges (u < v, pair count ≥
     * P95) — the q84 graph. Built ONCE per corpus snapshot: the
     * threshold is an EAGER one-row action at build time (the q63
-    * discipline), then the sparse edge list persists and serves the
+    * discipline), then the sparse edge list is stored and serves the
     * degree census, the wedge join, and the edge count without
-    * re-running the pair pipeline. */
+    * re-running the pair pipeline. The build runs the pair pipeline
+    * twice (histogram, then the stored edges) rather than pin a
+    * persisted intermediate the registry could not release. */
   private def supplierEdgesFor(li: DataFrame): DataFrame =
-    artifactCache.get(li, "supplier_edges")({
+    ArtifactStore.frame("supplier_edges", li) {
       val os = li.select(col("l_orderkey"), col("l_suppkey")).distinct()
       val a = os.select(col("l_orderkey"), col("l_suppkey").as("u"))
       val b = os.select(col("l_orderkey"), col("l_suppkey").as("v"))
       val pc = a.join(b, Seq("l_orderkey"))
         .filter(col("u") < col("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // P95 threshold as the WITNESS value at 1-based rank
       // max(ceil(0.95·n), 1) = max((19n+19) div 20, 1) — exact
       // integer rank arithmetic, quantile_disc semantics on both
@@ -81,91 +78,54 @@ object Stats {
           }.collectFirst { case (v, c) if c >= k => v }.get
           pc.filter(col("cnt") >= thr)
         }
-      // store is eager (parquet write), so pc can be dropped after
-      val out = graft.operators.ArtifactStore
-        .stored(edges.select(col("u"), col("v")), "supplier_edges")
-      pc.unpersist()
-      out
-    })
+      edges.select(col("u"), col("v"))
+    }
 
   /** Per-(part, part) basket co-occurrence counts (a < b) — the pair
     * statistics q83's rules derive from, and exactly the state
     * `streaming.BasketIndexStream` maintains incrementally on
-    * appends. Session-persisted for the same reason as the term-stats
-    * artifact: the counting pass (explode + aggregate) runs once per
-    * corpus snapshot; rule scoring re-reads the counts. */
-  private def basketPairCountsFor(li: DataFrame): DataFrame = {
-    val baskets = basketArraysFor(li)
-    artifactCache.get(li, "basket_pair_counts")(
-      graft.operators.ArtifactStore.stored(
-        baskets
-          .filter(size(col("parts")) >= 2)
-          .select(explode(
-            graft.functions.ArrayPairs.ordered_pairs(col("parts"))).as("p"))
-          .select(col("p.a").as("part_a"), col("p.b").as("part_b"))
-          .groupBy(col("part_a"), col("part_b"))
-          .agg(count(lit(1)).as("pc")),
-        "basket_pair_counts"))
-  }
+    * appends. */
+  private def basketPairCountsFor(li: DataFrame): DataFrame =
+    basketArraysFor(li)
+      .filter(size(col("parts")) >= 2)
+      .select(explode(
+        graft.functions.ArrayPairs.ordered_pairs(col("parts"))).as("p"))
+      .select(col("p.a").as("part_a"), col("p.b").as("part_b"))
+      .groupBy(col("part_a"), col("part_b"))
+      .agg(count(lit(1)).as("pc"))
 
   /** Per-part basket membership counts — the item marginals of the
     * pair statistics (support denominators). Catalog-sized. */
-  private def basketItemCountsFor(li: DataFrame): DataFrame = {
-    val baskets = basketArraysFor(li)
-    artifactCache.get(li, "basket_item_counts")(
-      graft.operators.ArtifactStore.stored(
-        baskets
-          .select(explode(col("parts")).as("l_partkey"))
-          .groupBy(col("l_partkey"))
-          .agg(count(lit(1)).as("cnt")),
-        "basket_item_counts"))
-  }
+  private def basketItemCountsFor(li: DataFrame): DataFrame =
+    basketArraysFor(li)
+      .select(explode(col("parts")).as("l_partkey"))
+      .groupBy(col("l_partkey"))
+      .agg(count(lit(1)).as("cnt"))
 
-  /** Degree census of the supplier co-occurrence graph (node, deg) —
-    * derived from the edge artifact, persisted because three q84
-    * consumers (wedge census, orientation, output) read it.
-    * Dependencies resolve BEFORE entering the cache's mapping
-    * function: computeIfAbsent forbids nested updates of the same map
-    * (r6 self-review — same-bin nesting can corrupt or livelock). */
-  private def supplierDegFor(li: DataFrame): DataFrame = {
-    val edges = supplierEdgesFor(li)
-    artifactCache.get(li, "supplier_deg")(
-      graft.operators.ArtifactStore.stored(
-        edges.select(col("u").as("node"))
-          .union(edges.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg")),
-        "supplier_deg"))
-  }
+  /** Degree census of the supplier co-occurrence graph (node, deg),
+    * derived from the edge artifact. */
+  private def supplierDegFor(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("node"))
+      .union(edges.select(col("v").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
   /** Degree-ordered orientation of the edge artifact (s → t with
-    * (deg, id)(s) < (deg, id)(t), target degree carried) — persisted
-    * because the triangle join reads it THREE times; recomputing it
-    * per join leg re-ran the degree joins 3× (12.2 s vs 0.8 s at
-    * sf0.1). Dependencies resolved before the cache call (see
-    * supplierDegFor). */
-  private def supplierOrientedFor(li: DataFrame): DataFrame = {
-    val edges = supplierEdgesFor(li)
-    val deg = supplierDegFor(li)
-    artifactCache.get(li, "supplier_oriented")({
-      val degU = deg.select(col("node").as("u"), col("deg").as("udeg"))
-      val degV = deg.select(col("node").as("v"), col("deg").as("vdeg"))
-      graft.operators.ArtifactStore.stored(
-        edges.join(degU, Seq("u")).join(degV, Seq("v"))
-          .select(
-            when(col("udeg") < col("vdeg") ||
-              (col("udeg") === col("vdeg") && col("u") < col("v")),
-              struct(col("u").as("s"), col("v").as("t"),
-                col("vdeg").as("tdeg")))
-              .otherwise(struct(col("v").as("s"), col("u").as("t"),
-                col("udeg").as("tdeg"))).as("e"))
-          .select(col("e.s").as("s"), col("e.t").as("t"),
-            col("e.tdeg").as("tdeg")),
-        "supplier_oriented")
-    })
+    * (deg, id)(s) < (deg, id)(t), target degree carried). */
+  private def supplierOrientedFor(edges: DataFrame,
+      deg: DataFrame): DataFrame = {
+    val degU = deg.select(col("node").as("u"), col("deg").as("udeg"))
+    val degV = deg.select(col("node").as("v"), col("deg").as("vdeg"))
+    edges.join(degU, Seq("u")).join(degV, Seq("v"))
+      .select(
+        when(col("udeg") < col("vdeg") ||
+          (col("udeg") === col("vdeg") && col("u") < col("v")),
+          struct(col("u").as("s"), col("v").as("t"),
+            col("vdeg").as("tdeg")))
+          .otherwise(struct(col("v").as("s"), col("u").as("t"),
+            col("udeg").as("tdeg"))).as("e"))
+      .select(col("e.s").as("s"), col("e.t").as("t"),
+        col("e.tdeg").as("tdeg"))
   }
-
-  /** Test hook: drop the persisted basket/edge artifacts. */
-  private[graft] def clearArtifacts(): Unit = artifactCache.clear()
 
   // ---- q78_linreg: grouped OLS of value on hour-of-day ---------------
   // Per event type, least-squares fit value ~ hour(ts): slope,
@@ -284,25 +244,17 @@ object Stats {
       .agg(count(lit(1)).cast(LongType).as("c"))
 
   // session-persisted value-histogram cells (build-once/serve-many,
-  // the PlanCache contract): q76's fences and q80's median/MAD both
+  // the ArtifactStore contract): q76's fences and q80's median/MAD both
   // derive from the SAME (event_type, cents, c) histogram — exactly
   // the state `streaming.QuantileHistStream` maintains additively —
   // yet each ran its own corpus aggregation per invocation (and q80's
   // med/dev subtrees read the cells twice). The frame is bounded by
   // the cents grid (≤ ~49k buckets × event types), so MEMORY_AND_DISK
   // residency is a few MB at any corpus size.
-  // snapshot semantics documented on graft.operators.PlanCache
-  private val cellsCache = new graft.operators.PlanCache[String, DataFrame](
-    graft.operators.ArtifactStore.evict)
 
-  /** Session-cached [[valueCells]] for an events frame. Stored as a
-    * session parquet table (ArtifactStore) so consumers analyze a
-    * file scan, not the cells derivation, then persisted for
-    * memory-speed serving. */
+  /** Session-cached [[valueCells]] for an events frame. */
   private[graft] def valueCellsIndex(events: DataFrame): DataFrame =
-    cellsCache.get(events, "cells")(
-      graft.operators.ArtifactStore.stored(valueCells(events),
-        "value_cells"))
+    ArtifactStore.frame("value_cells", events)(valueCells(events))
 
   /** Session-cached witness frame over the value cells — the per-type
     * quantile statistics (median, quartiles) a monitoring pipeline
@@ -310,15 +262,13 @@ object Stats {
     * the cells; these are its servable summaries). One |event_type|-
     * row frame per spec set; q80's serve previously re-ran the median
     * witness subtree 2-3x PER INVOCATION (it feeds both the deviation
-    * histogram and the final join), q76's the quartile one. */
+    * histogram and the final join), q76's the quartile one. The key
+    * carries the specs: one tag asked for two spec sets serves two
+    * frames. */
   private[graft] def cellWitnessIndex(events: DataFrame, tag: String,
-      specs: Seq[(String, Int, Int)]): DataFrame = {
-    val cells = valueCellsIndex(events) // resolve dependency pre-cache
-    cellsCache.get(events, s"wit:$tag")(
-      graft.operators.ArtifactStore.stored(
-        histWitnesses(cells, "event_type", "cents", specs),
-        s"cell_wit_$tag"))
-  }
+      specs: Seq[(String, Int, Int)]): DataFrame =
+    ArtifactStore.frame("cell_witness", events, (tag, specs))(
+      histWitnesses(valueCellsIndex(events), "event_type", "cents", specs))
 
   /** Witness quantiles over a (key, value, c) HISTOGRAM: the value at
     * rank r is the smallest bucket whose cumulative count reaches r —
@@ -487,21 +437,16 @@ object Stats {
     // ASC is exactly last-order-DAY DESC (same custkey tiebreak), so
     // the max-date scalar subquery + crossJoin stages are dropped and
     // the recency tile sorts on the per-customer aggregate directly.
-    // The per-customer RFM aggregate and the tile frame below are
-    // both pure functions of the orders snapshot — session artifacts
-    // like the q100/q105 rank frames (round 14 §11), keyed on the
-    // STABLE orders frame (the per-invocation localCheckpoint this
-    // replaces had a non-key-stable RDD-scan plan — the r13 OPQ
-    // lesson). Previously every invocation re-ran the orders agg +
-    // checkpoint AND the tile sketch/count construction jobs.
-    val cust = artifactCache.get(orders, "rfm_cust")(
-      graft.operators.ArtifactStore.stored(
-        orders
-          .groupBy(col("o_custkey"))
-          .agg(max(col("o_orderdate").cast(DateType)).as("last_day"),
-            count(lit(1)).as("frequency"),
-            sum(dec2(col("o_totalprice"))).as("monetary")),
-        "rfm_cust"))
+    val cust = orders
+      .groupBy(col("o_custkey"))
+      .agg(max(col("o_orderdate").cast(DateType)).as("last_day"),
+        count(lit(1)).as("frequency"),
+        sum(dec2(col("o_totalprice"))).as("monetary"))
+      // seven consumers read this aggregate (the base join + 3 tile
+      // axes x 2 subtrees each): checkpoint it once instead of
+      // re-running the orders scan+agg per subtree —
+      // partition-count-preserving, executor-local storage
+      .localCheckpoint(false)
     val nt = graft.operators.DistributedNtile
     // three INDEPENDENT tile axes. tilesMany (round 13) shared ONE
     // sketch pass and ONE count job across the axes (6 → 2 eager
@@ -512,13 +457,10 @@ object Stats {
     // and two of the three re-joins (17 → ~10 jobs at sf0.1). Ranks,
     // and therefore tiles, are identical to the per-axis form
     // (parity pinned in DistributedNtileSpec).
-    val tilesDf = artifactCache.get(orders, "rfm_tiles")(
-      graft.operators.ArtifactStore.stored(
-        nt.tilesFused(cust, 4, Seq("o_custkey"), Seq(
-          ("r", Seq(col("last_day").desc, col("o_custkey"))),
-          ("f", Seq(col("frequency").desc, col("o_custkey"))),
-          ("m", Seq(col("monetary").desc, col("o_custkey"))))),
-        "rfm_tiles"))
+    val tilesDf = nt.tilesFused(cust, 4, Seq("o_custkey"), Seq(
+      ("r", Seq(col("last_day").desc, col("o_custkey"))),
+      ("f", Seq(col("frequency").desc, col("o_custkey"))),
+      ("m", Seq(col("monetary").desc, col("o_custkey")))))
     val seg = cust
       .join(tilesDf, Seq("o_custkey"))
     seg.groupBy(col("r"), col("f"), col("m"))
@@ -553,8 +495,8 @@ object Stats {
   // items ≤ ~20 in this schema), so the self-join on l_orderkey is
   // linear in orders — the scale-safe shape; a corpus-wide pair join
   // without the basket key would be the quadratic mistake. The
-  // deduped basket is a session artifact (basketFor) — one dedup
-  // exchange serves the order count, the item counts, and both pair
+  // deduped basket (basketArraysFor) is one reused dedup exchange
+  // that serves the order count, the item counts, and both pair
   // sides. Counts are integers; ratios are one rounded double tree.
   private val q83: Q = (s, dir) => {
     val li = t(s, dir, "lineitem")
@@ -564,9 +506,7 @@ object Stats {
     // ordered pairs (a < b) generated row-locally from the sorted
     // array — bounded by C(basket,2) per order, no self-join; the
     // codegen-friendly tight-loop expression replaces the interpreted
-    // HOF chain (1.5 s of the total at sf0.1). Counts ride the
-    // session pair/item artifacts (the BasketIndexStream state), so
-    // steady-state serving is the broadcast joins + TakeOrdered only.
+    // HOF chain (1.5 s of the total at sf0.1).
     val pairs = basketPairCountsFor(li)
     // item counts are catalog-sized (≪ baskets): broadcast both probe
     // sides so the pair frame (the big side) never re-shuffles.
@@ -627,7 +567,8 @@ object Stats {
   // is the one-row census: nodes, edges, triangles, global
   // clustering coefficient.
   private val q84: Q = (s, dir) => {
-    val deg = supplierDegFor(t(s, dir, "lineitem"))
+    val edges = supplierEdgesFor(t(s, dir, "lineitem"))
+    val deg = supplierDegFor(edges)
     // n_edges = Σdeg / 2 (every edge contributes to exactly two
     // nodes' degrees): the edge count rides the SAME one-row degree
     // aggregate as the wedge count — the r13 form paid a separate
@@ -644,7 +585,7 @@ object Stats {
     // work is O(Σ out-deg²) = O(E^1.5) worst case, where the naive
     // id-ordered wedge join is Σ deg² and degenerates on hubs. The
     // count is identical; only the enumeration strategy changes.
-    val oriented = supplierOrientedFor(t(s, dir, "lineitem"))
+    val oriented = supplierOrientedFor(edges, deg)
     val tri = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.s") === col("e2.s") &&
@@ -869,10 +810,8 @@ object Stats {
     // session-persisted like the other maintained artifacts (the
     // flagging pass re-reads it instead of re-aggregating the corpus)
     val ev = Events.events(s, dir)
-    val profBase = artifactCache.get(ev, "seasonal_profile")(
-      graft.operators.ArtifactStore.stored(
-        graft.streaming.SeasonalProfileStream.batchProfile(ev),
-        "seasonal_profile"))
+    val profBase = ArtifactStore.frame("seasonal_profile", ev)(
+      graft.streaming.SeasonalProfileStream.batchProfile(ev))
     val prof = profBase
       // mean4: round-half-up(sx/n · 10⁴) in exact integer arithmetic
       // (sx is DECIMAL scale 2, so 2·sx·10⁴ is integral) — computed
@@ -1000,15 +939,9 @@ object Stats {
   // no such bound — it rides DistributedNtile instead); a corpus-
   // scale cumulative share would ride q52's sketch.
   private val q89: Q = (s, dir) => {
-    // the per-part revenue aggregate is catalog-bounded and a pure
-    // function of the lineitem snapshot — session artifact (one
-    // corpus pass per snapshot; the ABC windows serve from it)
-    val li = t(s, dir, "lineitem")
-    val rev = artifactCache.get(li, "part_revenue")(
-      graft.operators.ArtifactStore.stored(
-        li.groupBy(col("l_partkey"))
-          .agg(sum(dec2(col("l_extendedprice"))).as("rev")),
-        "part_revenue"))
+    val rev = t(s, dir, "lineitem")
+      .groupBy(col("l_partkey"))
+      .agg(sum(dec2(col("l_extendedprice"))).as("rev"))
     // ONE sorted window stage serves both the running sum and the
     // grand total (unbounded-both frame on the same sort) — the
     // separate scalar-aggregate + crossJoin cost two extra stages
@@ -1071,16 +1004,9 @@ object Stats {
   // tiebreak never mattered for VALUE selection). Values pass
   // through untouched: no rounding needed, the output IS input data.
   private val q90: Q = (s, dir) => {
-    // the (event_type, value, c) histogram is bounded by the value
-    // grid and a pure function of the events snapshot — a session
-    // artifact like the q80 cents cells / q104 PSI cells (one corpus
-    // pass per snapshot; the witness selection serves from it)
-    val ev = Events.events(s, dir)
-    val cells = artifactCache.get(ev, "q90_value_cells")(
-      graft.operators.ArtifactStore.stored(
-        ev.groupBy(col("event_type"), col("value"))
-          .agg(count(lit(1)).as("c")),
-        "q90_value_cells"))
+    val cells = Events.events(s, dir)
+      .groupBy(col("event_type"), col("value"))
+      .agg(count(lit(1)).as("c"))
     val wc = Window.partitionBy(col("event_type")).orderBy(col("value"))
     def pos(p: Double) =
       greatest(ceil(lit(p) * col("n")), lit(1)).cast(LongType)

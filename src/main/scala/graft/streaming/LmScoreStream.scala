@@ -140,7 +140,7 @@ object LmScoreStream {
           // only needs corpus-wide counts (source-sum-invariant), so
           // a literal source keeps the maintainer schema-minimal.
           // UNCACHED derivation: the creation batch's plan never
-          // recurs, so the session PlanCaches must not persist it
+          // recurs, so the session ArtifactStore must not persist it
           val weights = graft.queries.Curation.lmModelWeightsUncached(
             pinned.withColumn("source", lit("stream")))
           require(!weights.isEmpty,

@@ -69,7 +69,7 @@ object HeavyDup {
       "llm_dedup_clusters", "llm_dedup_stats", "llm_split_leakage_safe",
       "llm_source_overlap")
     for (k <- keys) {
-      graft.operators.PlanCache.clearAll() // per-key cold artifacts
+      graft.operators.ArtifactStore.clearAll() // per-key cold artifacts
       val t0 = System.nanoTime()
       val df = graft.SparkEntry.queries(k)(spark, out)
       val n = df.count()

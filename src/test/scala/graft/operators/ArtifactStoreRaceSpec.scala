@@ -6,29 +6,31 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 
 /** Concurrent-serving correctness at the artifact layer (VERDICT r8
-  * #2): the session caches (`PlanCache` and its consumers — dedup
-  * pair indexes, trained quantizers, term stats) are shared mutable
-  * state, and the realistic failure mode of the long-lived-session
-  * story is N submitter threads racing the SAME artifact build cold.
-  * These tests pin the contract the serving bench relies on:
+  * #2): the session registry (`ArtifactStore` and its consumers —
+  * dedup pair indexes, trained quantizers, term stats) is shared
+  * mutable state, and the realistic failure mode of the long-lived-
+  * session story is N submitter threads racing the SAME artifact build
+  * cold. These tests pin the contract the serving bench relies on:
   *
-  *  - a racing `get` on one cold key runs `compute` exactly once and
-  *    every thread observes the same value (CHM `computeIfAbsent`
-  *    gives this; the pin makes a future reimplementation keep it);
+  *  - racing callers of one cold key run the build exactly once and
+  *    every thread observes the same value (the per-key slot gives
+  *    this; the pin makes a future reimplementation keep it);
+  *  - a build may call another artifact's build, and each builds
+  *    once;
   *  - racing a REAL artifact-backed query (whose builder runs Spark
   *    jobs and persists frames) cold produces results identical to
   *    the sequential answer — including through `clearAll` in between
   *    (the eviction path unpersists; a stale-broadcast or
   *    double-unpersist bug would surface as a wrong answer or a
-  *    thrown exception here).
+  *    thrown exception here);
+  *  - `clearAll` leaves no artifact file and no build plan behind.
   */
-class PlanCacheRaceSpec extends SparkSpec {
+class ArtifactStoreRaceSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
   test("8 threads racing one cold key: compute runs exactly once, " +
     "all threads see the same value") {
-    val cache = new PlanCache[Int, java.lang.Long]()
     val df = spark.range(10).toDF("id")
     val builds = new AtomicInteger(0)
     val threads = 8
@@ -41,11 +43,11 @@ class PlanCacheRaceSpec extends SparkSpec {
       val t = new Thread(() => {
         try {
           start.await(30, TimeUnit.SECONDS)
-          results(i) = cache.get(df, 7) {
+          results(i) = ArtifactStore.value("race_one_key", df, 7) {
             builds.incrementAndGet()
             Thread.sleep(100) // widen the race window
-            java.lang.Long.valueOf(42L)
-          }.longValue()
+            42L
+          }()
         } catch { case e: Throwable => errs.add(e) }
         finally done.countDown()
       })
@@ -62,27 +64,29 @@ class PlanCacheRaceSpec extends SparkSpec {
   test("distinct keys race independently; clear() evicts every value " +
     "through onEvict exactly once") {
     val evicted = new AtomicInteger(0)
-    val cache = new PlanCache[Int, String](_ => { evicted.incrementAndGet(); () })
-    val df = spark.range(3).toDF("id")
+    def get(p: Int)(v: => String): String =
+      ArtifactStore.value("race_keys", spark.range(3).toDF("id"), p)(v)(
+        _ => { evicted.incrementAndGet(); () })
     val threads = (0 until 6).map { i =>
       val t = new Thread(() => {
-        cache.get(df, i % 3)(s"v${i % 3}")
+        get(i % 3)(s"v${i % 3}")
         ()
       })
       t.setDaemon(true); t.start(); t
     }
     threads.foreach(_.join(30000))
-    cache.clear()
+    ArtifactStore.clear("race_keys")
     assert(evicted.get() == 3,
       s"expected 3 evictions (one per distinct key), got ${evicted.get()}")
-    // a cleared cache rebuilds (no tombstone state)
-    val again = cache.get(df, 0)("rebuilt")
+    // a cleared name rebuilds (no tombstone state)
+    val again = get(0)("rebuilt")
     assert(again == "rebuilt")
+    ArtifactStore.clear("race_keys")
   }
 
   test("4 threads racing a real artifact-backed query cold match the " +
     "sequential answer") {
-    // llm_bm25 rides the term-stats + idf-model PlanCaches; its
+    // llm_bm25 rides the term-stats + idf-model artifacts; its
     // builder runs Spark jobs and persists frames — the heaviest
     // artifact path in the inventory. Race it cold and hash-compare
     // against the sequential (also-cold) answer.
@@ -97,11 +101,11 @@ class PlanCacheRaceSpec extends SparkSpec {
       (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
     }
     graft.Tables.clearViews(spark)
-    PlanCache.clearAll()
+    ArtifactStore.clearAll()
     val expected = fingerprint()
     assert(expected._1 > 0, "llm_bm25 returned no rows")
 
-    PlanCache.clearAll() // back to cold for the race
+    ArtifactStore.clearAll() // back to cold for the race
     val threads = 4
     val start = new CyclicBarrier(threads)
     val got =
@@ -127,5 +131,61 @@ class PlanCacheRaceSpec extends SparkSpec {
       assert(got.get(i) == expected,
         s"thread $i got ${got.get(i)}, sequential answer was $expected")
     }
+  }
+
+  test("a build that calls another artifact's build completes, and " +
+    "each builds exactly once") {
+    val df = spark.range(5).toDF("id")
+    val inner = new AtomicInteger(0)
+    val outer = new AtomicInteger(0)
+    def innerFrame() = ArtifactStore.frame("race_inner", df) {
+      inner.incrementAndGet()
+      df.selectExpr("id * 2 AS v")
+    }
+    def outerFrame() = ArtifactStore.frame("race_outer", df) {
+      outer.incrementAndGet()
+      innerFrame().selectExpr("v + 1 AS w")
+    }
+    val threads = 4
+    val start = new CyclicBarrier(threads)
+    val sums = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val errs =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[Throwable]()
+    val done = new CountDownLatch(threads)
+    (0 until threads).foreach { i =>
+      val t = new Thread(() => {
+        try {
+          start.await(30, TimeUnit.SECONDS)
+          sums.put(i, outerFrame().selectExpr("sum(w)").head().getLong(0))
+          ()
+        } catch { case e: Throwable => errs.add(e) }
+        finally done.countDown()
+      })
+      t.setDaemon(true)
+      t.start()
+    }
+    assert(done.await(120, TimeUnit.SECONDS), "nested builds timed out")
+    assert(errs.isEmpty, s"nested build threw: ${errs}")
+    assert(outer.get() == 1 && inner.get() == 1,
+      s"outer built ${outer.get()} times, inner ${inner.get()} times")
+    assert((0 until threads).forall(sums.get(_) == 25L))
+    // the inner artifact is served to a later direct caller
+    assert(innerFrame().count() == 5L && inner.get() == 1)
+    ArtifactStore.clear("race_outer")
+    ArtifactStore.clear("race_inner")
+  }
+
+  test("clearAll after llm_bm25 and llm_retrieval_ndcg leaves no " +
+    "artifact files and no build plans") {
+    // every stored frame leaves through the one eviction path, which
+    // unpersists it, drops its build plan and deletes its files
+    Seq("llm_bm25", "llm_retrieval_ndcg")
+      .foreach(k => graft.SparkEntry.queries(k)(spark, dir).collect())
+    val (files, plans) = ArtifactStore.residue
+    assert(files.nonEmpty && plans.nonEmpty, "the queries stored nothing")
+    ArtifactStore.clearAll()
+    val (filesAfter, plansAfter) = ArtifactStore.residue
+    assert(filesAfter.isEmpty, s"files left after clearAll: $filesAfter")
+    assert(plansAfter.isEmpty, s"build plans left after clearAll: $plansAfter")
   }
 }

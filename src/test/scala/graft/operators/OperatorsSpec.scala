@@ -93,7 +93,7 @@ class OperatorsSpec extends SparkSpec {
   test("bloom-pruned join returns exactly the plain join's rows and " +
     "prunes non-matching big-side rows before the join") {
     import spark.implicits._
-    BloomJoin.clearCache()
+    graft.operators.ArtifactStore.clear("bloom_filter")
     val o = spark.read.parquet(s"$dir/orders.parquet")
     val cust = spark.read.parquet(s"$dir/customer.parquet")
       .filter(col("c_mktsegment") === "BUILDING")
@@ -117,7 +117,7 @@ class OperatorsSpec extends SparkSpec {
   test("bloom probe: null keys are dropped, matching the inner join; " +
     "string keys probe by utf8 bytes") {
     import spark.implicits._
-    BloomJoin.clearCache()
+    graft.operators.ArtifactStore.clear("bloom_filter")
     val big = Seq((Some(1L), "m"), (None, "n"), (Some(9L), "x"))
       .toDF("k", "tag")
     val small = Seq((1L, "dim1")).toDF("sk", "attr")
@@ -218,7 +218,7 @@ class OperatorsSpec extends SparkSpec {
   test("hot-key salted join: hot NULL keys never poison the cold " +
     "branch's NOT-IN filter") {
     import spark.implicits._
-    SkewJoin.clearHotKeyCache()
+    graft.operators.ArtifactStore.clear("hot_keys")
     // NULL is the most frequent key — an unfiltered probe would
     // collect it as hot, and `NOT k IN (..., NULL)` then evaluates
     // NULL for every cold row, silently dropping the whole cold side
@@ -242,7 +242,7 @@ class OperatorsSpec extends SparkSpec {
   test("hot-key probe is memoized per plan: a repeated join reuses " +
     "one detection scan") {
     import spark.implicits._
-    SkewJoin.clearHotKeyCache()
+    graft.operators.ArtifactStore.clear("hot_keys")
     val big = ((1 to 3000).map(_ => (999L, 1L)) ++
       (1 to 500).map(i => (i.toLong % 50, i.toLong))).toDF("k", "payload")
     val first = SkewJoin.probeHotKeys(big, "k",
@@ -257,7 +257,7 @@ class OperatorsSpec extends SparkSpec {
     val other = SkewJoin.probeHotKeys(big.filter(col("payload") >= 0), "k",
       sampleFraction = 0.5, hotRowThreshold = 1000)
     assert(!(other eq first))
-    SkewJoin.clearHotKeyCache()
+    graft.operators.ArtifactStore.clear("hot_keys")
   }
 
   test("pagerank: distributed loop and bounded driver variant are " +

@@ -93,12 +93,12 @@ class PcaSpec extends SparkSpec {
     write(scale = 1.0f)
     val first = eigenvalue()
     // same path, 25x the variance: WITHOUT the clear hook the stale
-    // PC1 fit would be served (PlanCache keys on the read plan)
+    // PC1 fit would be served (ArtifactStore keys on the read plan)
     write(scale = 5.0f)
-    graft.queries.Multimodal.clearPcaCache()
+    graft.operators.ArtifactStore.clear("pca_pc1")
     val second = eigenvalue()
     assert(second > first * 10,
-      s"stale PC1 fit served after clearPcaCache: $first vs $second")
+      s"stale PC1 fit served after clear(\"pca_pc1\"): $first vs $second")
   }
 
   test("llm_embed_pca query: projections centered globally; labels " +

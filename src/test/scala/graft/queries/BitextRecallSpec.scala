@@ -36,7 +36,7 @@ class BitextRecallSpec extends SparkSpec {
 
   test("clustered corpus: IVF bitext pairs recover >= 0.9 of the " +
     "brute mutual-top-1 pairs") {
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
     val emb = clusteredCorpus(seed = 11)
     val brute = pairSet(Llm.bitextBruteFor(emb))
     val ivf = pairSet(Llm.bitextIvfFor(emb))
@@ -46,14 +46,16 @@ class BitextRecallSpec extends SparkSpec {
       s"(${ivf.intersect(brute).size}/${brute.size})")
     assert(recall >= 0.9,
       f"cell-bounded bitext must recover clustered pairs: $recall%.3f")
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
   }
 
   test("trained k=ceil(sqrt(n)) quantizer: the PRODUCTION bitext " +
     "serving path recovers >= 0.9 of the brute pairs on the " +
     "clustered regime") {
-    graft.operators.KMeans.clearCache()
-    Multimodal.clearIvfTrainedIndex()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
+    graft.operators.ArtifactStore.clear("bitext_a")
+    graft.operators.ArtifactStore.clear("bitext_b")
     val emb = clusteredCorpus(seed = 13)
     val brute = pairSet(Llm.bitextBruteFor(emb))
     val ivf = pairSet(Llm.bitextIvfTrained(emb))
@@ -63,13 +65,15 @@ class BitextRecallSpec extends SparkSpec {
       s"(${ivf.intersect(brute).size}/${brute.size})")
     assert(recall >= 0.9,
       f"trained-cell bitext must recover clustered pairs: $recall%.3f")
-    graft.operators.KMeans.clearCache()
-    Multimodal.clearIvfTrainedIndex()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
+    graft.operators.ArtifactStore.clear("bitext_a")
+    graft.operators.ArtifactStore.clear("bitext_b")
   }
 
   test("isotropic fixture: recall is recorded honestly (ceiling " +
     "acknowledged, not silently missed)") {
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val brute = pairSet(Llm.bitextBruteFor(emb))
     val ivf = pairSet(Llm.bitextIvfFor(emb))
@@ -84,6 +88,6 @@ class BitextRecallSpec extends SparkSpec {
     assert(ivf.nonEmpty, "ivf pair set must not be empty")
     assert(recall > 0.05,
       f"ivf recall collapsed below the random-probe floor: $recall%.3f")
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
   }
 }

@@ -52,14 +52,14 @@ class BpeSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.operators.PlanCache.clearAll()
+    graft.operators.ArtifactStore.clearAll()
     tmp
   }
 
   test("the 8 trained merges at sf0.001 equal the straight-line " +
     "reference trainer's") {
     val dir = "/root/testdata/sf0.001"
-    graft.operators.PlanCache.clearAll()
+    graft.operators.ArtifactStore.clearAll()
     val got = graft.SparkEntry.queries("llm_bpe_train")(spark, dir)
       .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3)))
     val vocab = graft.Tables(spark, dir, "documents")
@@ -114,7 +114,7 @@ class BpeSpec extends SparkSpec {
   test("apply censuses tie out per source at sf0.001 against the " +
     "reference tokenizer") {
     val dir = "/root/testdata/sf0.001"
-    graft.operators.PlanCache.clearAll()
+    graft.operators.ArtifactStore.clearAll()
     val rows = graft.SparkEntry.queries("llm_bpe_apply")(spark, dir)
       .collect()
     val docs = graft.Tables(spark, dir, "documents")

@@ -19,7 +19,8 @@ class DriverBoundsSpec extends SparkSpec {
     val store = s"$out/ivf"
     val emb = Seq(1L -> Seq(1f, 0f), 2L -> Seq(0f, 1f))
       .toDF("vec_id", "embedding")
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     graft.operators.KMeans.fitOrLoad(
       emb, "embedding", "vec_id", k = 2, iters = 0, store)
     // forge the committed meta to claim a giant quantizer: the cap
@@ -32,7 +33,8 @@ class DriverBoundsSpec extends SparkSpec {
       graft.operators.KMeans.load(spark, store)
     }
     assert(ex.getMessage.contains("driver-residency"), ex.getMessage)
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
   }
 
   test("heavy-hitters maintainer refuses a stored summary past the " +
@@ -161,14 +163,14 @@ class DriverBoundsSpec extends SparkSpec {
   test("bigram LM model build refuses an over-cap vocabulary before " +
     "collecting it") {
     import spark.implicits._
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     val docs = Seq((1L, "a b c d e", "web"), (2L, "b c d e f", "web"))
       .toDF("doc_id", "text", "source")
     val ex = intercept[IllegalArgumentException] {
       Curation.bigramLmModel(docs, maxEntries = 1L)
     }
     assert(ex.getMessage.contains("broadcast model"), ex.getMessage)
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
   }
 
   test("withGroupRank refuses a per-entity group key before the " +

@@ -129,15 +129,15 @@ class MultimodalSpec extends SparkSpec {
   test("hash-sampled quantizer is deterministic across runs") {
     // clear the IVF index between runs so the second call re-BUILDS —
     // the assertion is determinism of the build, not cache hygiene
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
     val a = Multimodal.annIvfWith(spark, dir, 2).collect().toSeq
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
     val b = Multimodal.annIvfWith(spark, dir, 2).collect().toSeq
     assert(a == b)
   }
 
   test("IVF index is built once per input plan (build-once cache)") {
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val first = Multimodal.ivfIndex(emb)
     val again = Multimodal.ivfIndex(
@@ -147,12 +147,13 @@ class MultimodalSpec extends SparkSpec {
     val other = Multimodal.ivfIndex(emb.limit(50))
     assert(!(other.assign eq first.assign),
       "a different input plan must build its own index")
-    Multimodal.clearIvfIndex()
+    graft.operators.ArtifactStore.clear("ivf_index")
   }
 
   test("trained IVF (k-means, k=ceil(sqrt(n))): recall@10 >= 0.9 at " +
     "nProbe=2 on a clustered corpus — the regime IVF exists for") {
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     import spark.implicits._
     // synthetic clustered embeddings at fixture scale: 30 tight
     // direction cones of ~33 vectors (dim 16, seeded) — the shape of a
@@ -173,7 +174,8 @@ class MultimodalSpec extends SparkSpec {
     // about its limit: any k-cell quantizer's probe set captures about
     // nProbe/k of uniformly-spread neighbors (k=23 at sf0.01) — assert
     // the ceiling is acknowledged, not silently missed
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val fixtureRecall = Multimodal.ivfTrainedRecallAt10(
       spark.read.parquet(s"$dir/embeddings.parquet"), nProbe = 2)
     info(f"isotropic fixture recall@10 at nProbe=2: $fixtureRecall%.2f")
@@ -185,13 +187,15 @@ class MultimodalSpec extends SparkSpec {
 
   test("trained IVF verdict query: Lloyd objective never degrades, " +
     "deterministic across runs, k scales with corpus size") {
-    graft.operators.KMeans.clearCache()
-    Multimodal.clearTrainedCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
+    graft.operators.ArtifactStore.clear("ivf_t_verdict")
     val a = Multimodal.annIvfTrainedWith(spark, dir, 2).collect().toSeq
     // drop BOTH caches so b re-trains from scratch: the assertion is
     // run-determinism of the training itself, not cache hygiene
-    graft.operators.KMeans.clearCache()
-    Multimodal.clearTrainedCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
+    graft.operators.ArtifactStore.clear("ivf_t_verdict")
     val b = Multimodal.annIvfTrainedWith(spark, dir, 2).collect().toSeq
     assert(a == b, "trained verdict must be run-deterministic")
     assert(a.size == 1)
@@ -282,7 +286,8 @@ class MultimodalSpec extends SparkSpec {
     "records what the store was trained with; serving a store against " +
     "a different-dimension corpus fails loudly") {
     import spark.implicits._
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val out = java.nio.file.Files.createTempDirectory("quantp").toString
     val emb3 = Seq(
       1L -> Seq(1f, 0f, 0f), 2L -> Seq(0f, 1f, 0f),
@@ -309,14 +314,16 @@ class MultimodalSpec extends SparkSpec {
         emb4, "embedding", "vec_id", k = 2, iters = 1, store)
     }
     assert(ex.getMessage.contains("different embedding table"))
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
   }
 
   test("trained quantizer persists durably: save/load round-trips " +
     "bit-identically, fitOrLoad serves from disk across sessions, " +
     "uncommitted dirs fail loudly") {
     import spark.implicits._
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val trained = graft.operators.KMeans.fit(
       emb, "embedding", "vec_id", k = 5, iters = 2)
@@ -330,7 +337,8 @@ class MultimodalSpec extends SparkSpec {
     // iters=0 must return the iters=2-trained centroids: retraining
     // would reproduce the seeded init, so equality proves it served
     // from the store
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val served = graft.operators.KMeans.fitOrLoad(
       emb, "embedding", "vec_id", k = 5, iters = 0, store)
     assert(served.map(_.toSeq) == trained.map(_.toSeq),
@@ -352,7 +360,8 @@ class MultimodalSpec extends SparkSpec {
     intercept[IllegalStateException] {
       graft.operators.KMeans.load(spark, s"$out/nothing_here")
     }
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
   }
 
   test("llm_ivf_balance: shares sum to 1, counts cover the corpus, " +

@@ -24,25 +24,13 @@ class PartitioningInvarianceSpec extends graft.SparkSpec {
 
   private val rowsOnly = Set("llm_embed_pca")
 
-  // every session artifact cache with a clear hook (add the hook AND
-  // the call here when introducing a new cache), so pass-2 artifacts
-  // keyed on view plans (which no later suite can hit) do not stay
-  // persisted/pinned for the rest of the shared-session JVM (r7
-  // review, both passes)
+  // evict every session artifact (and the durable-quantizer load
+  // cache), so pass-2 artifacts keyed on view plans (which no later
+  // suite can hit) do not stay persisted/pinned for the rest of the
+  // shared-session JVM (r7 review, both passes)
   private def clearAllCaches(): Unit = {
-    graft.queries.Curation.clearTermStats()
-    graft.queries.Stats.clearArtifacts()
-    graft.queries.Llm.clearPairStatsIndex()
-    graft.queries.Llm.clearPairIndex()
-    graft.queries.Llm.clearWinnowIndex()
-    graft.queries.Llm.clearStatsCache()
-    graft.queries.Multimodal.clearIvfIndex()
-    graft.queries.Multimodal.clearTrainedCache()
-    graft.queries.Multimodal.clearCentroidCache()
-    graft.queries.Multimodal.clearPcaCache()
-    graft.operators.KMeans.clearCache()
-    graft.operators.BloomJoin.clearCache()
-    graft.operators.SkewJoin.clearHotKeyCache()
+    graft.operators.ArtifactStore.clearAll()
+    graft.operators.KMeans.clearLoadedCache()
   }
 
   private def canon(df: DataFrame): Seq[String] =

@@ -51,7 +51,7 @@ class PlanBudgetSpec extends SparkSpec {
     // caches, queries built in sorted order so caches warm in the
     // same sequence PlanCensus saw
     graft.Tables.clearViews(spark)
-    graft.operators.PlanCache.clearAll()
+    graft.operators.ArtifactStore.clearAll()
     val over = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val plan = fn(spark, dir).queryExecution.executedPlan.toString

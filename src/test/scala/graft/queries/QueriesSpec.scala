@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.operators.ArtifactStore
 import org.apache.spark.sql.functions._
 
 /** Inventory-wide invariants: every query runs on the smoke fixture,
@@ -20,13 +21,70 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  // artifact name -> the keys whose invocation built or hit it
+  private val touched =
+    scala.collection.mutable.Map.empty[String, Set[String]]
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name executes on the smoke fixture") {
+      val before = ArtifactStore.stats
       val df = fn(spark, dir)
       assert(df.columns.nonEmpty)
       // empty results are legitimate for some dedup queries at this sf
       assert(df.count() >= 0)
+      ArtifactStore.stats.foreach { case (a, n) =>
+        if (!before.get(a).contains(n))
+          touched(a) = touched.getOrElse(a, Set.empty[String]) + name
+      }
     }
+  }
+
+  // Artifacts admitted with a single consumer (ArtifactStore's
+  // admission rule): bounded statistics whose size does not grow with
+  // the corpus rows.
+  private val BoundedStatistics = Set(
+    "bloom_filter", // driver-side sketch bytes of a dimension slice
+    "cms_sketch", // 4 x 4096 counters
+    "hot_keys", // at most maxHotKeys keys
+    "label_centroids", // one row per label
+    "lm_hist", // one row per distinct rounded score
+    "mg_sketch", // 64 counters
+    "opq_perm", // one row: the dimension permutation
+    "pca_pc1", // one vector of the embedding width
+    "psi_cells", // sources x 10 buckets
+    "row_count", // one number
+    "seasonal_profile") // event types x hour slots
+
+  // Single-consumer indexes that break the rule and are kept for a
+  // stated reason; the test pins this set so it can only shrink.
+  private val HeldIndexes = Set(
+    // the benchmark panel's llm_containment_dedup serves from it
+    "pair_stats",
+    // the winnow served-view test below asserts on the stored index
+    "winnow_pairs")
+
+  test("every artifact serves at least 2 distinct keys or is a bounded " +
+    "statistic") {
+    assert(touched.nonEmpty, "runs after the per-key loop above")
+    // a key served a derived artifact also reads what it was built from
+    val deps = ArtifactStore.dependencies
+    def closure(a: String, seen: Set[String] = Set.empty): Set[String] =
+      if (seen(a)) seen
+      else deps.getOrElse(a, Set.empty)
+        .foldLeft(seen + a)((s, d) => closure(d, s))
+    val readers = touched.toSeq
+      .flatMap { case (a, ks) => closure(a).toSeq.map(_ -> ks) }
+      .groupMapReduce(_._1)(_._2)(_ ++ _)
+    val single = readers.toSeq.collect {
+      case (a, ks) if ks.size < 2 && !BoundedStatistics(a) => a -> ks
+    }.toMap
+    val unlisted = (single -- HeldIndexes).toSeq
+      .map { case (a, ks) => s"$a <- ${ks.mkString(", ")}" }.sorted
+    assert(unlisted.isEmpty,
+      s"single-consumer artifacts outside the bounded list: $unlisted")
+    assert(HeldIndexes.forall(single.contains),
+      s"held indexes no longer single-consumer (drop them from the " +
+        s"list): ${HeldIndexes -- single.keySet}")
   }
 
   test("q01 pushes its filter and projection into the parquet scan") {
@@ -183,7 +241,7 @@ class QueriesSpec extends SparkSpec {
 
   test("llm_bm25 matches a hand-computed score (k1=1.2, b=0.75)") {
     import spark.implicits._
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     // N=3, dl = 3/2/2, avgdl = 7/3; df: join=1 scan=2 dup=1
     val docs = Seq(
       (1L, "join join scan", "web"), (2L, "scan dup", "web"),
@@ -205,13 +263,13 @@ class QueriesSpec extends SparkSpec {
     assert(got == want, s"got $got want $want")
     // a doc with no query term never scores
     assert(!got.contains(3L), "doc without query terms must not appear")
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
   }
 
   test("llm_bpe_pairs counts corpus-weighted adjacent character pairs " +
     "(hand-computed; single-char words contribute nothing)") {
     import spark.implicits._
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     // corpus: "aab aab ab x" -> word counts: aab=2, ab=1, x=1
     // pairs: aa from aab (1/occurrence * 2) = 2
     //        ab from aab (1 * 2) + ab (1 * 1) = 3; x contributes none
@@ -221,7 +279,7 @@ class QueriesSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(rows == Map(("a", "b") -> 3L, ("a", "a") -> 2L),
       s"got $rows")
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
   }
 
   test("llm_hybrid_rrf fuses the two legs by reciprocal rank: scores " +
@@ -538,7 +596,7 @@ class QueriesSpec extends SparkSpec {
     "to the exact posting-list formulation, and the index is built once " +
     "per input plan") {
     val fixture = spark.read.parquet(s"$dir/documents.parquet")
-    Llm.clearPairIndex()
+    graft.operators.ArtifactStore.clear("neardup_pairs")
     // the LSH index's exact-verify output at J >= 0.6 equals the
     // uncapped exact posting-list Jaccard on any corpus where band
     // recall is 1 (all fixtures) — this pins llm_ngram_jaccard_dedup's
@@ -557,14 +615,13 @@ class QueriesSpec extends SparkSpec {
     assert(again eq Llm.lshVerifiedPairs(fixture))
     val other = Llm.lshVerifiedPairs(fixture.limit(50))
     assert(!(other eq again))
-    Llm.clearPairIndex()
+    graft.operators.ArtifactStore.clear("neardup_pairs")
   }
 
   test("winnow overlap index and term-stats artifact: served views are " +
     "bit-identical to the direct formulations, built once per plan") {
     val fixture = spark.read.parquet(s"$dir/documents.parquet")
-    Llm.clearWinnowIndex()
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     // winnow pair index == the direct posting-list pair query
     val viaIndex = Llm.winnowPairs(fixture)
     val direct = Llm.winnowPairsFor(fixture)
@@ -586,8 +643,7 @@ class QueriesSpec extends SparkSpec {
     assert(Curation.termStats(
       spark.read.parquet(s"$dir/documents.parquet")) eq
       Curation.termStats(fixture))
-    Llm.clearWinnowIndex()
-    Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
   }
 
   test("minhash rejects non-array<string> input and out-of-range " +

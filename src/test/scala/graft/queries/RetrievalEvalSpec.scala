@@ -63,7 +63,7 @@ class RetrievalEvalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.operators.PlanCache.clearAll() // fresh bm25 stats for tmp
+    graft.operators.ArtifactStore.clearAll() // fresh bm25 stats for tmp
     val rows = graft.SparkEntry
       .queries("llm_retrieval_ndcg")(spark, tmp).collect()
     assert(rows.isEmpty,

@@ -20,7 +20,8 @@ class SemDedupSpec extends SparkSpec {
 
   test("trained-cell SemDeDup drops every exact duplicate and only " +
     "genuine near-duplicates") {
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     import spark.implicits._
     val rng = new scala.util.Random(11)
     val centers = Array.fill(10)(Array.fill(16)(rng.nextGaussian()))
@@ -91,6 +92,7 @@ class SemDedupSpec extends SparkSpec {
     assert(got == expected,
       s"drop set diverges from brute re-derivation: " +
         s"missing=${expected -- got}, extra=${got -- expected}")
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
   }
 }

@@ -45,7 +45,7 @@ class WindowAuditSpec extends SparkSpec {
 
   private def aggCovered(p: LogicalPlan): Boolean = p match {
     case _: Aggregate => true
-    // a session artifact (PlanCache + persist — the q76/q80 value
+    // a session artifact (ArtifactStore + persist — the q76/q80 value
     // cells, PQ codebooks…) substitutes an InMemoryRelation leaf for
     // the derivation subtree; audit the CACHED logical plan, so a
     // bounded-cells frame stays recognized as one when served from
@@ -99,7 +99,7 @@ class WindowAuditSpec extends SparkSpec {
   test("no query plans a bounded-alphabet corpus window (the q39 " +
     "straggler class)") {
     graft.Tables.clearViews(spark)
-    graft.operators.PlanCache.clearAll()
+    graft.operators.ArtifactStore.clearAll()
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         violations(fn(spark, dirSmall), fn(spark, dirBig))

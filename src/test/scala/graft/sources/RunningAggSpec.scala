@@ -115,7 +115,7 @@ class RunningAggSpec extends SparkSpec {
       mem.addData(batch2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    graft.queries.Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     val truth = graft.queries.Curation.bigramStatsFor(
       (batch1 ++ batch2).toDF("doc_id", "source", "text"))
       .collect()
@@ -125,7 +125,7 @@ class RunningAggSpec extends SparkSpec {
     assert(state == truth,
       s"streamed bigram artifact diverges from batch build: " +
         s"$state vs $truth")
-    graft.queries.Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
   }
 
   test("an uncommitted version is invisible to readers and safely " +

@@ -37,7 +37,8 @@ class IvfAssignStreamSpec extends SparkSpec {
     "quantizer) after every batch prefix; the quantizer trains once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val all = clustered(0 until 240)
     val batches = Seq(all.take(80), all.slice(80, 160), all.drop(160))
     val out = Files.createTempDirectory("ivfidx").toString
@@ -80,7 +81,8 @@ class IvfAssignStreamSpec extends SparkSpec {
     "scores visibly below same-distribution appends — the retrain " +
     "signal") {
     import spark.implicits._
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val out = Files.createTempDirectory("ivfdrift").toString
     val inDist = clustered(0 until 120)
     IvfAssignStream.updateBatch(
@@ -102,7 +104,8 @@ class IvfAssignStreamSpec extends SparkSpec {
     "the stream; an all-zero-norm creation batch fails loudly " +
     "(r6 review)") {
     import spark.implicits._
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val out = Files.createTempDirectory("ivfsmall").toString
     // 3 usable vectors, k=8: the quantizer must commit with k=3 and
     // every later batch must keep appending against it
@@ -124,14 +127,16 @@ class IvfAssignStreamSpec extends SparkSpec {
         zeros.toDF("vec_id", "embedding"), out2, 0, k = 4, iters = 1)
     }
     assert(ex.getMessage.contains("nonzero norm"), ex.getMessage)
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
   }
 
   test("compaction preserves the assignment and the drift rows; " +
     "replays and re-delivered vec_ids are no-ops; zero-norm vectors " +
     "assign deterministically") {
     import spark.implicits._
-    graft.operators.KMeans.clearCache()
+    graft.operators.ArtifactStore.clear("kmeans")
+    graft.operators.KMeans.clearLoadedCache()
     val out = Files.createTempDirectory("ivfcomp").toString
     val b1 = clustered(0 until 60)
     val b2 = clustered(60 until 100) :+ Vec(999L, Seq.fill(12)(0f))

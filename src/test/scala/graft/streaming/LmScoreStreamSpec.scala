@@ -24,7 +24,7 @@ class LmScoreStreamSpec extends SparkSpec {
 
   private def fresh(): String = {
     LmScoreStream.clearModelCache()
-    graft.queries.Curation.clearTermStats()
+    graft.operators.ArtifactStore.clearAll()
     Files.createTempDirectory("lmscore").toString
   }
 
